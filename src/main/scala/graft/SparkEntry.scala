@@ -228,12 +228,9 @@ object SparkEntry {
       // output must equal kg_mentions exactly, so it shares that oracle.
       import s.implicits._
       val (_, docs) = goldAndDocs(s, dir)
-      // explicit width (see KgPipeline.detectMentions): a bare
-      // repartition(col) is AQE-coalesced to one task on tiny shuffles
-      val sents = KgPipeline.sentences(docs).repartition(
-        math.max(s.sparkContext.defaultParallelism,
-          s.conf.get("spark.sql.shuffle.partitions", "200").toInt),
-        col("doc_id"))
+      // explicit width: a bare repartition(col) is AQE-coalesced to one
+      // task on tiny shuffles
+      val sents = KgPipeline.sentences(docs).repartition(KgPipeline.detectWidth(s), col("doc_id"))
       graft.detect.Detector
         .detectPartitionedGazetteer(sents, DocsGen.vocabEntries.toDS())
         .toDF()

@@ -15,10 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * propagation needs O(diameter). Each phase is one groupBy-min plus one
   * equi-join — partial-aggregation-friendly, no collect on the data path.
   *
-  * ADAPTIVE execution: graphs whose bidirected edge set is bounded
-  * (`driverMaxEdges`, default 1M — this pipeline's canonicalization graph
-  * is vocabulary-bounded at any corpus scale) resolve with a driver
-  * union-find in a single job; larger graphs run the contraction loop.
+  * ADAPTIVE execution: graphs whose raw edge list is bounded
+  * (`driverMaxEdges`, default 100k — this pipeline's canonicalization
+  * graph is vocabulary-bounded at any corpus scale) resolve with a driver
+  * union-find in at most one job; larger graphs run the contraction loop.
   *
   * Scale features baked in:
   *  - SALTED two-phase min: hub nodes (a disease appearing in millions of
@@ -36,16 +36,17 @@ object Canon {
   /** @param edges two string columns `src`, `dst` (undirected pairs)
     * @param driverMaxEdges adaptive cutover: a graph whose raw edge list
     *        is at most this size resolves with a driver-side union-find —
-    *        two scan-only jobs (count + bounded collect), zero shuffles —
-    *        returning a LocalRelation that downstream broadcast joins
-    *        consume without an exchange. This pipeline's canonicalization
+    *        one bounded-collect job (none for a LocalRelation edge
+    *        plan), zero shuffles — returning a LocalRelation that
+    *        downstream broadcast joins consume without an exchange. This pipeline's canonicalization
     *        graph is vocabulary-bounded (distinct surfaces ↔ concepts), so
     *        at ANY corpus scale it takes this path; the contraction loop
     *        below is the general-graph path (forced with 0). The default
     *        is 100k edges ≈ a few MB of driver heap (two short strings per
     *        row) — safe on a default driver; callers on GENERAL graphs
-    *        whose edge count is data-sized should pass 0 to skip both the
-    *        gating count() job and any driver collect (ADVICE r2).
+    *        whose edge count is data-sized should pass 0 to skip the
+    *        gating job and any driver collect (ADVICE r2). Duplicate edges
+    *        are harmless on both paths.
     * @return DataFrame(node: string, component: string) — component is the
     *         lexicographically smallest node id in the component.
     */
@@ -59,37 +60,14 @@ object Canon {
     val e0 = edges.select(col("src"), col("dst"))
 
     if (driverMaxEdges > 0) {
-      // Adaptive gate in ONE action (r6, guide §1.2: don't pay two full
-      // evaluations of the edge plan): the former count()-then-collect()
-      // pair scanned — and re-shuffled, when the edge plan holds a
-      // distinct — the edges twice. A bounded collect aggregate answers
-      // "is the graph ≤ driverMaxEdges AND what are its edges" in one
-      // job with bounded memory: an under-gate graph is collected
-      // completely, an over-gate graph collapses to an overflow BOOLEAN
-      // at the first buffer overflow (no edge rows shipped — see
-      // BoundedCollectAgg) and takes the contraction loop. A
-      // LocalRelation edge plan (the pipeline's driver-resolved
-      // canonicalization graph) short-circuits to ZERO jobs.
+      // Adaptive gate in ONE action (guide §1.2: don't pay two full
+      // evaluations of the edge plan, which re-shuffle when it holds a
+      // distinct): an under-gate graph is collected completely, an
+      // over-gate graph collapses to an overflow flag and takes the
+      // contraction loop. A LocalRelation edge plan (the pipeline's
+      // driver-resolved canonicalization graph) costs ZERO jobs.
       val cap = math.min(driverMaxEdges, Int.MaxValue - 1L).toInt
-      val collected: Option[Seq[org.apache.spark.sql.Row]] =
-        e0.queryExecution.optimizedPlan match {
-          case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            val rows = e0.collect().toSeq // LocalTableScan: no job
-            if (rows.length <= cap) Some(rows) else None
-          case _ =>
-            val paySchema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("src", e0.schema("src").dataType, e0.schema("src").nullable),
-              org.apache.spark.sql.types.StructField("dst", e0.schema("dst").dataType, e0.schema("dst").nullable)))
-            val agg = graft.ops.BoundedCollect.agg(cap, paySchema)
-            val row = e0.agg(agg(col("src"), col("dst")).as("_e"))
-              .select(col("_e.items").as("items"), col("_e.over").as("over"))
-              .head()
-            // over-gate graphs collapsed to a boolean at the first
-            // overflow — no edge rows were shipped for them
-            if (row.getBoolean(1)) None
-            else Some(row.getSeq[org.apache.spark.sql.Row](0))
-        }
-      collected.foreach { edgeRows =>
+      graft.ops.BoundedCollect.collect(e0, cap).foreach { edgeRows =>
         // bounded graph: min-root union-find with path compression over
         // the RAW edge list — no bidirection, no dedup, no shuffle at
         // all. Union always attaches the larger root under the smaller,

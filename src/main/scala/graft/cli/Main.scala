@@ -135,7 +135,7 @@ object Main {
     if (args.predict.nonEmpty) {
       // Prediction mode — the reference's predict_enhanced.py flow
       // (`:213-499`) over a raw text file instead of an interactive stdin
-      // loop: one sentence per non-blank line (S2 scan), batched detector,
+      // loop: one sentence per non-blank line (S2 scan), the detector,
       // then the requested output format(s) (S5 json / S6 markup / S7 bio)
       // plus the entity-type distribution report (`:484-499`).
       require(!args.docs.startsWith("synth:") && !args.docs.startsWith("iceberg:"),

@@ -4,19 +4,20 @@ import graft.core.{Bio, Mention, Sentence}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** The batched mention detector — the Spark re-architecture of the
+/** The mention detector — the Spark re-architecture of the
   * reference's sequence-model kernel (`bert_crf_model.py:61-116`,
   * batch loop `predict_enhanced.py:341-353`).
   *
   * Architecture (SURVEY.md §2.3): a typed `Dataset[Sentence]` flows through
-  * ONE `mapPartitions` that (a) groups rows into batches exactly like the
-  * reference's `texts[i:i+batch_size]` slices, (b) tokenizes per character
-  * (Chinese clinical text is char-level in the reference, `utils.py:56-84`),
-  * (c) computes per-position per-label emission scores from broadcast
-  * gazetteer features (replacing the BERT forward pass — same output
-  * contract: seq_len × num_labels floats), (d) runs a BIO-constrained
-  * Viterbi decode (the `crf.decode` analog, `bert_crf_model.py:112-116`),
-  * and (e) converts tags to mentions with `Bio.decodeBio`
+  * ONE `mapPartitions` that, one sentence at a time (the reference's
+  * `texts[i:i+batch_size]` slices feed its GPU model; this kernel has
+  * nothing to batch), (a) tokenizes per character (Chinese clinical text
+  * is char-level in the reference, `utils.py:56-84`), (b) computes
+  * per-position per-label emission scores from broadcast gazetteer
+  * features (replacing the BERT forward pass — same output contract:
+  * seq_len × num_labels floats), (c) runs a BIO-constrained Viterbi
+  * decode (the `crf.decode` analog, `bert_crf_model.py:112-116`), and
+  * (d) converts tags to mentions with `Bio.decodeBio`
   * (`predict_enhanced.py:282-326`).
   *
   * Everything the task needs is broadcast once (gazetteer + transition
@@ -133,11 +134,16 @@ object Detector {
 
   object Gazetteer {
     def apply(entries: Iterable[(String, String)]): Gazetteer = {
+      entries.foreach(requireSurface)
       val m = entries.toMap
       val maxLen = if (m.isEmpty) 1 else m.keysIterator.map(_.length).max
       Gazetteer(m, math.min(maxLen, 32))
     }
   }
+
+  /** A null surface fails loudly, naming its entry, on every detect path. */
+  private def requireSurface(e: (String, String)): Unit =
+    if (e._1 == null) throw new IllegalArgumentException(s"gazetteer entry $e has a null surface")
 
   /** Character trie over gazetteer surfaces: longest-match lookup with
     * ZERO allocation per probe (no substring candidates). Built once per
@@ -598,14 +604,14 @@ object Detector {
     }
   }
 
-  /** The batched mapPartitions detector over a typed Dataset — one narrow
-    * map stage, batches of `batchSize` like the reference's
-    * `texts[i:i+batch_size]` (`predict_enhanced.py:341-343`).
+  /** The mapPartitions detector over a typed Dataset — one narrow map
+    * stage; the kernel runs one sentence at a time (the reference batches
+    * `texts[i:i+batch_size]`, `predict_enhanced.py:341-343`, for its GPU
+    * model; a per-sentence CPU kernel has nothing to batch).
     */
   def detect(
       sentences: Dataset[Sentence],
       gazBc: Broadcast[Gazetteer],
-      batchSize: Int = 32,
       maxLen: Int = 128,
       trans: Array[Array[Float]] = transitions,
       featsBc: Broadcast[Features.FeatureModel] = null): Dataset[Mention] = {
@@ -618,15 +624,13 @@ object Detector {
         gazBc.value, maxLen, trans,
         if (featsBc == null) null else featsBc.value,
         sharedTrie = trieFor(gazBc))
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap(kernel.detect)
-      }
+      it.flatMap(kernel.detect)
     }
   }
 
   /** Detection against a gazetteer BEYOND broadcast budget (the
     * large-lexicon story the link side already has,
-    * [[graft.link.Linker.surfaceResolutionLargeLexicon]]): the gazetteer
+    * [[graft.link.Linker.resolve]]): the gazetteer
     * stays a DISTRIBUTED dataset and candidates reach each sentence
     * through a blocking-key equi-join instead of a broadcast.
     *
@@ -653,7 +657,6 @@ object Detector {
   def detectPartitionedGazetteer(
       sentences: Dataset[Sentence],
       gazetteer: Dataset[(String, String)],
-      batchSize: Int = 32,
       maxLen: Int = 128,
       trans: Array[Array[Float]] = transitions,
       featsBc: Broadcast[Features.FeatureModel] = null): Dataset[Mention] = {
@@ -683,7 +686,7 @@ object Detector {
     // a 3-4-code-unit key no 2-code-unit sentence key could ever equal,
     // silently dropping its mentions (ADVICE r5, medium).
     val gazKeyed = gazetteer
-      .filter((e: (String, String)) => e._1.nonEmpty)
+      .filter { (e: (String, String)) => requireSurface(e); e._1.nonEmpty }
       .map { case (surf, tpe) =>
         (surf.substring(0, math.min(2, surf.length)), surf, tpe)
       }
@@ -744,37 +747,33 @@ object Detector {
     * fixture/eval corpora — SURVEY.md §7.3). Runs the same Viterbi over
     * one-hot emissions so the CRF layer is still exercised.
     */
-  def detectFromTags(
-      tagged: Dataset[graft.core.TaggedSentence],
-      batchSize: Int = 32): Dataset[Mention] = {
+  def detectFromTags(tagged: Dataset[graft.core.TaggedSentence]): Dataset[Mention] = {
     val spark = tagged.sparkSession
     import spark.implicits._
     tagged.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { ts =>
-          val chars = ts.chars.toArray
-          val n = chars.length
-          val em = Array.fill(n, NumLabels)(0f)
-          var i = 0
-          while (i < n) {
-            val id = Bio.LabelToId.getOrElse(ts.tags(i), oId)
-            em(i)(id) = 8.0f
-            i += 1
+      it.flatMap { ts =>
+        val chars = ts.chars.toArray
+        val n = chars.length
+        val em = Array.fill(n, NumLabels)(0f)
+        var i = 0
+        while (i < n) {
+          val id = Bio.LabelToId.getOrElse(ts.tags(i), oId)
+          em(i)(id) = 8.0f
+          i += 1
+        }
+        val path = if (n == 0) Array.empty[Int] else viterbi(em)
+        val conf = confidences(em, path)
+        val tags = path.map(labelArr)
+        Bio.decodeBio(
+          chars.toIndexedSeq,
+          tags.toIndexedSeq,
+          confOf = (a, b) => {
+            var sum = 0.0; var k = a
+            while (k < b) { sum += conf(k); k += 1 }
+            if (b > a) sum / (b - a) else 1.0
           }
-          val path = if (n == 0) Array.empty[Int] else viterbi(em)
-          val conf = confidences(em, path)
-          val tags = path.map(labelArr)
-          Bio.decodeBio(
-            chars.toIndexedSeq,
-            tags.toIndexedSeq,
-            confOf = (a, b) => {
-              var sum = 0.0; var k = a
-              while (k < b) { sum += conf(k); k += 1 }
-              if (b > a) sum / (b - a) else 1.0
-            }
-          ).map { case (tpe, text, start, end, c) =>
-            Mention(ts.doc_id, ts.span_idx, tpe, text, start, end, c)
-          }
+        ).map { case (tpe, text, start, end, c) =>
+          Mention(ts.doc_id, ts.span_idx, tpe, text, start, end, c)
         }
       }
     }

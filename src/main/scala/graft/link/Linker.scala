@@ -1,28 +1,37 @@
 package graft.link
 
 import graft.core.{Hashing, LexiconEntry, LinkedMention, Mention}
+import graft.ops.BoundedCollect
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** Entity linking: blocking-key candidate generation + broadcast lexicon
-  * join + context-embedding dot-product scoring + argmax per mention.
+/** Entity linking: blocking-key candidate generation + lexicon join +
+  * context-embedding dot-product scoring + argmax per mention.
   *
   * The reference's only "linking" is a dictionary membership probe
   * (`data_augmentation.py:66,77,126`); the north_star upgrades it to a
-  * candidate-scored link. Plan shape (all Catalyst-native):
+  * candidate-scored link. Plan shape (all Catalyst-native, written once
+  * in [[best]]):
   *
-  *   mentions --explode blocking keys--> (key, mention)
-  *       ⋈ broadcast(lexicon keyed the same way)        [J1+J2]
+  *   queries --explode blocking keys--> (key, query)
+  *       ⋈ lexicon keyed the same way, one side broadcast  [J1+J2]
   *       --score: exact-surface boost + dot(ctx_emb, concept_emb)
-  *       --min_by argmax per mention (partial agg, no window) --> best
+  *       --min_by argmax per query (partial agg, no window) --> best
   *
-  * The lexicon side is broadcast in the default path (small by contract —
-  * `Lexicon.prune`/`quantize` exist to keep it so); when it outgrows the
-  * broadcast budget anyway, [[surfaceResolutionLargeLexicon]] reverses
-  * the build side: the vocabulary-bounded surface set broadcasts against
-  * the DISTRIBUTED lexicon. The mention table itself never shuffles for
-  * the join in either regime.
+  * The pipeline links through [[resolve]]: the distinct
+  * (text, entity_type) surface set is resolved once and the result is
+  * broadcast back onto the mentions, so the mention table never shuffles
+  * for the link. `resolve` broadcasts whichever side is known to be
+  * bounded:
+  *
+  *   lexicon         surfaces ≤ gate   strategy
+  *   LocalRelation   yes               score on the driver ([[surfaceResolutionLocal]])
+  *   distributed     yes               broadcast the surfaces against the lexicon
+  *   either          no                broadcast the lexicon ([[surfaceResolution]])
+  *
+  * Every strategy gives the same concept ids and exact scores
+  * (PipelineSpec pins them to [[surfaceResolutionLocal]]).
   */
 object Linker {
 
@@ -79,6 +88,11 @@ object Linker {
   private def ctxEmbCol(c: Column, dim: Int): Column =
     graft.functions.CtxEmbedding.ctx_embedding(c, dim)
 
+  /** Distinct surfaces at most this many take a bounded path in
+    * [[resolve]]: collected to the driver, then scored there or broadcast.
+    */
+  private val SurfaceGateCap = 1 << 18
+
   /** Link each mention to its best lexicon concept (left join semantics:
     * mentions with no candidate survive with null concept — they feed
     * canonicalization as surface-only nodes).
@@ -89,47 +103,72 @@ object Linker {
       ctxDim: Int = EmbeddingDim): Dataset[LinkedMention] = {
     val spark = mentions.sparkSession
     import spark.implicits._
-
-    val m = mentions
-      .withColumn("ctx_emb", ctxEmbCol($"text", ctxDim))
-      .withColumn("bkey", explode(blockingKeysCol($"text")))
-
-    val lex = lexicon
-      .withColumn("bkey", explode(blockingKeysCol($"surface")))
-      .select($"bkey", $"concept_id", $"surface", $"entity_type".as("lex_type"), $"embedding")
-
-    val scored = m
-      .join(broadcast(lex), m("bkey") === lex("bkey") && m("entity_type") === lex("lex_type"), "left")
-      .withColumn(
-        "link_score",
-        when($"concept_id".isNull, lit(Double.MinValue))
-          .otherwise(
-            when($"surface" === $"text", lit(10.0)).otherwise(lit(0.0)) +
-              // native codegen'd expression — no UDF boundary in the hot path
-              graft.functions.VecDot.vec_dot($"ctx_emb", $"embedding")))
-
-    // argmax per mention via min_by over (-score, concept_id): a single
-    // shuffle with map-side partial aggregation — beats a row_number window
-    // (full sort, no partial agg) at every scale.
-    val payload = struct(
-      $"text", $"confidence",
-      coalesce($"concept_id", concat(lit("S:"), $"text")).as("concept_id"),
-      when($"link_score" === Double.MinValue, lit(0.0)).otherwise($"link_score").as("link_score"))
-    val ordering = struct(
-      (-$"link_score").as("neg_score"),
-      coalesce($"concept_id", lit("\uffff")).as("tie"))
-
-    scored
-      .groupBy($"doc_id", $"span_idx", $"start", $"end", $"entity_type")
-      .agg(min_by(payload, ordering).as("best"))
+    best(mentions.toDF(), Seq("doc_id", "span_idx", "start", "end", "entity_type"),
+      lexicon, ctxDim, broadcastQueries = false)
       .select(
-        $"doc_id", $"span_idx", $"entity_type", $"best.text".as("text"),
-        $"start", $"end", $"best.confidence".as("confidence"),
-        $"best.concept_id".as("concept_id"), $"best.link_score".as("link_score"))
+        $"doc_id", $"span_idx", $"entity_type", $"text", $"start", $"end",
+        $"confidence", $"concept_id", $"link_score")
       .as[LinkedMention]
   }
 
-  /** Surface-level resolution table: best concept per distinct
+  /** The one distributed scorer. Each query row — unique on `keys`, with
+    * `text` and `entity_type` among its columns — explodes to its blocking
+    * keys and meets the lexicon entries sharing a key and the entity type;
+    * a candidate scores the exact-surface boost plus
+    * dot(ctx_emb, concept_emb). A query with no candidate links to its
+    * `S:` surface node at score 0. Output: `keys`, the other query
+    * columns, `concept_id`, `link_score`.
+    *
+    * `broadcastQueries` picks the build side: false broadcasts the lexicon
+    * and left-joins every query; true broadcasts the queries and streams
+    * the lexicon. An outer join cannot preserve its broadcast side, so
+    * there the queries rejoin as null candidates scored Double.MinValue,
+    * which lose the argmax to any real candidate.
+    */
+  private def best(
+      queries: DataFrame,
+      keys: Seq[String],
+      lexicon: Dataset[LexiconEntry],
+      ctxDim: Int,
+      broadcastQueries: Boolean): DataFrame = {
+    val q = queries
+      .withColumn("ctx_emb", ctxEmbCol(col("text"), ctxDim))
+      .withColumn("qkey", explode(blockingKeysCol(col("text"))))
+    val lex = lexicon
+      .withColumn("lkey", explode(blockingKeysCol(col("surface"))))
+      .select(col("lkey"), col("concept_id"), col("surface"), col("entity_type").as("lex_type"), col("embedding"))
+    val on = q("qkey") === lex("lkey") && q("entity_type") === lex("lex_type")
+    val score = when(col("surface") === col("text"), lit(10.0)).otherwise(lit(0.0)) +
+      // native codegen'd expression — no UDF boundary in the hot path
+      graft.functions.VecDot.vec_dot(col("ctx_emb"), col("embedding"))
+    val qCols = queries.columns.toSeq.map(col)
+    val noCandidate = lit(Double.MinValue)
+    val scored =
+      if (broadcastQueries)
+        lex.join(broadcast(q), on)
+          .select(qCols :+ col("concept_id") :+ score.as("link_score"): _*)
+          .union(queries.select(
+            qCols :+ lit(null).cast("string").as("concept_id") :+ noCandidate.as("link_score"): _*))
+      else
+        q.join(broadcast(lex), on, "left").select(qCols :+ col("concept_id") :+
+          when(col("concept_id").isNull, noCandidate).otherwise(score).as("link_score"): _*)
+
+    // argmax per query via min_by over (-score, concept_id): a single
+    // shuffle with map-side partial aggregation — beats a row_number window
+    // (full sort, no partial agg) at every scale.
+    val payload = struct(queries.columns.filterNot(keys.contains).toSeq.map(col) ++ Seq(
+      coalesce(col("concept_id"), concat(lit("S:"), col("text"))).as("concept_id"),
+      when(col("link_score") === Double.MinValue, lit(0.0)).otherwise(col("link_score")).as("link_score")): _*)
+    val ordering = struct(
+      (-col("link_score")).as("neg_score"),
+      coalesce(col("concept_id"), lit("\uffff")).as("tie"))
+    scored
+      .groupBy(keys.map(col): _*)
+      .agg(min_by(payload, ordering).as("best"))
+      .select(keys.map(col) :+ col("best.*"): _*)
+  }
+
+  /** Broadcast-lexicon strategy: best concept per distinct
     * (text, entity_type). The link score is a pure function of the surface
     * (context embedding is text-derived), so resolving each distinct
     * surface ONCE and broadcasting the result back is semantically
@@ -138,66 +177,54 @@ object Linker {
   def surfaceResolution(
       surfaces: Dataset[(String, String)], // (text, entity_type)
       lexicon: Dataset[LexiconEntry],
-      ctxDim: Int = EmbeddingDim): DataFrame = {
-    val spark = surfaces.sparkSession
-    import spark.implicits._
-    // doc_id = the surface text itself so link()'s per-mention argmax key
-    // (doc_id, span_idx, start, end, type) stays unique per surface
-    val asMentions = surfaces.map { case (text, tpe) =>
-      Mention(text, 0, tpe, text, 0, 0, 1.0)
-    }
-    link(asMentions, lexicon, ctxDim).toDF()
-      .select($"text", $"entity_type", $"concept_id", $"link_score")
-  }
+      ctxDim: Int = EmbeddingDim): DataFrame =
+    best(surfaces.toDF("text", "entity_type"), Seq("text", "entity_type"),
+      lexicon, ctxDim, broadcastQueries = false)
 
-  /** Resolution for lexicons TOO LARGE to broadcast (a full UMLS-scale
-    * concept table with embeddings can exceed any executor's broadcast
-    * budget even int8-quantized): reverse the build side. The distinct
-    * surface set is vocabulary-bounded and tiny, so it broadcasts against
-    * the DISTRIBUTED lexicon for the candidate inner join; the argmax
-    * shuffles only (surface, candidate) pairs — bounded by candidates per
-    * surface, never by lexicon size — and surfaces with no candidate pick
-    * up the `S:` fallback through a final small left join. Output is
-    * identical to [[surfaceResolution]] (equality-tested).
+  /** Broadcast-surfaces strategy, for lexicons TOO LARGE to broadcast (a
+    * full UMLS-scale concept table with embeddings can exceed any
+    * executor's broadcast budget even int8-quantized): the bounded
+    * surface set broadcasts against the DISTRIBUTED lexicon, and the
+    * argmax shuffles only (surface, candidate) pairs — bounded by
+    * candidates per surface, never by lexicon size.
     */
-  def surfaceResolutionLargeLexicon(
+  private[graft] def surfaceResolutionLargeLexicon(
       surfaces: Dataset[(String, String)], // (text, entity_type)
       lexicon: Dataset[LexiconEntry],
-      ctxDim: Int = EmbeddingDim): DataFrame = {
-    val spark = surfaces.sparkSession
+      ctxDim: Int = EmbeddingDim): DataFrame =
+    best(surfaces.toDF("text", "entity_type"), Seq("text", "entity_type"),
+      lexicon, ctxDim, broadcastQueries = true)
+
+  /** Resolution table (text, entity_type, concept_id, link_score) for the
+    * distinct `surfaces` (text, entity_type), by the rule in the object
+    * doc. The gate is one bounded-collect job over `surfaces`. On both
+    * bounded paths the result is a LocalRelation, so broadcasting it and
+    * anything projected from it costs no further job; the over-gate
+    * result is persisted (it feeds the mention join and canonicalization)
+    * — `unpersist()` it when done.
+    */
+  def resolve(surfaces: DataFrame, lexicon: Dataset[LexiconEntry]): DataFrame = {
+    val spark = lexicon.sparkSession
     import spark.implicits._
-    val m = surfaces.toDF("text", "entity_type")
-      .withColumn("ctx_emb", ctxEmbCol($"text", ctxDim))
-      .withColumn("mkey", explode(blockingKeysCol($"text")))
-    val lex = lexicon
-      .withColumn("bkey", explode(blockingKeysCol($"surface")))
-      .select($"bkey", $"concept_id", $"surface", $"entity_type".as("lex_type"), $"embedding")
-    val candidates = lex
-      .join(broadcast(m), lex("bkey") === m("mkey") && lex("lex_type") === m("entity_type"))
-      .withColumn(
-        "link_score",
-        when($"surface" === $"text", lit(10.0)).otherwise(lit(0.0)) +
-          graft.functions.VecDot.vec_dot($"ctx_emb", $"embedding"))
-    val best = candidates
-      .groupBy($"text", $"entity_type")
-      .agg(min_by(
-        struct($"concept_id", $"link_score"),
-        struct((-$"link_score").as("neg_score"), $"concept_id".as("tie"))).as("best"))
-      .select($"text", $"entity_type",
-        $"best.concept_id".as("concept_id"), $"best.link_score".as("link_score"))
-    surfaces.toDF("text", "entity_type")
-      .join(best, Seq("text", "entity_type"), "left")
-      .select($"text", $"entity_type",
-        coalesce($"concept_id", concat(lit("S:"), $"text")).as("concept_id"),
-        coalesce($"link_score", lit(0.0)).as("link_score"))
+    BoundedCollect.collect(surfaces, SurfaceGateCap) match {
+      case None =>
+        surfaceResolution(surfaces.as[(String, String)], lexicon)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+      case Some(rows) =>
+        val bounded = rows.map(r => (r.getString(0), r.getString(1)))
+        val resolved =
+          if (BoundedCollect.isLocal(lexicon))
+            surfaceResolutionLocal(bounded, lexicon.collect().toSeq)
+          else surfaceResolutionLargeLexicon(bounded.toDS(), lexicon)
+            .as[(String, String, String, Double)].collect().toSeq
+        resolved.toDF("text", "entity_type", "concept_id", "link_score")
+    }
   }
 
   /** Driver-local replica of [[surfaceResolution]] (r6): score a BOUNDED
-    * surface set against a BOUNDED lexicon entirely on the driver — zero
-    * Spark jobs. Used by the pipeline when both sides pass its gates
-    * (the surface set is vocabulary-bounded by design — the pipeline
-    * already BROADCASTS the resolution, so driver-side scoring assumes
-    * nothing new); the distributed path remains for everything else.
+    * surface set against a driver-resident lexicon entirely on the
+    * driver — zero Spark jobs. The driver strategy of [[resolve]], and
+    * the reference every other strategy is tested against.
     *
     * Output-identical to the DataFrame path by construction: it calls
     * the SAME scalar kernels the codegen expressions call
@@ -252,27 +279,5 @@ object Linker {
         (text, tpe, best.concept_id, bestScore)
       }
     }
-  }
-
-  /** Scale path used by the pipeline: dedup surfaces (map-side combine
-    * makes the shuffle tiny — the distinct surface set is vocabulary-
-    * bounded, not data-bounded), run the full scorer on the small set,
-    * then broadcast-join the resolution back onto mentions. ZERO wide
-    * shuffles of the mention table; output identical to `link`.
-    */
-  def linkBySurface(
-      mentions: Dataset[Mention],
-      lexicon: Dataset[LexiconEntry],
-      ctxDim: Int = EmbeddingDim): Dataset[LinkedMention] = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    val surfaces = mentions.select($"text", $"entity_type").distinct().as[(String, String)]
-    val resolution = surfaceResolution(surfaces, lexicon, ctxDim)
-    mentions
-      .join(broadcast(resolution), Seq("text", "entity_type"), "inner")
-      .select(
-        $"doc_id", $"span_idx", $"entity_type", $"text", $"start", $"end",
-        $"confidence", $"concept_id", $"link_score")
-      .as[LinkedMention]
   }
 }

@@ -1,14 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{Encoder, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, BooleanType, StructField, StructType}
 
 /** Bounded collect-list aggregator (r6): gathers a group's rows into one
   * array-typed buffer with an explicit OVERFLOW flag — the building
-  * block of the posting-list dedup plans ([[Dedup]]) and the
-  * single-action adaptive gates of connected components
-  * ([[graft.canon.Canon]]) and the pipeline's surface resolution.
+  * block of the posting-list dedup plans ([[Dedup]]) and of the
+  * single-action adaptive gate ([[BoundedCollect.collect]]) shared by
+  * connected components ([[graft.canon.Canon]]) and surface resolution
+  * ([[graft.link.Linker.resolve]]).
   *
   * Semantics: `over = (group row count > cap)`; `items` holds the
   * complete group iff `over = false`. The moment a buffer would exceed
@@ -66,4 +69,23 @@ private[graft] object BoundedCollect {
     */
   def agg(cap: Int, inSchema: StructType): org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(new BoundedCollectAgg(cap, inSchema), Encoders.row(inSchema))
+
+  /** True when the plan is a driver-resident LocalRelation: collecting it
+    * runs a LocalTableScan on the driver, no job.
+    */
+  def isLocal(ds: Dataset[_]): Boolean =
+    ds.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** The adaptive gate: all rows of `df` when there are at most `cap` of
+    * them, else None. A LocalRelation costs no job; any other plan costs
+    * ONE bounded-aggregate job, in which an over-cap input collapses to
+    * the overflow flag instead of shipping rows.
+    */
+  def collect(df: DataFrame, cap: Int): Option[Seq[Row]] =
+    if (isLocal(df)) Some(df.collect().toSeq).filter(_.length <= cap)
+    else {
+      val row = df.agg(agg(cap, df.schema)(df.columns.map(col).toSeq: _*).as("_b"))
+        .select(col("_b.items"), col("_b.over")).head()
+      if (row.getBoolean(1)) None else Some(row.getSeq[Row](0))
+    }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *     → explode text spans (media spans pass through untouched — the
   *       span-sequence invariant is checked by `spanSignature`)
   *     → repartition by hash(doc_id)                  [north_rule]
-  *     → batched mapPartitions mention detector       [Detector]
-  *     → broadcast-lexicon link                       [Linker]
+  *     → mapPartitions mention detector               [Detector]
+  *     → surface resolution, broadcast back           [Linker.resolve]
   *     → connected-components canonicalization        [Canon]
   *     → relation assembly → triples                  [Triples]
   *
@@ -53,28 +53,30 @@ object KgPipeline {
             struct(s.getField("kind"), s.getField("text"), s.getField("media_ref"), s.getField("offset")))),
         256).as("span_sig"))
 
+  /** Partition count of the detect stage when the caller gives none. It
+    * must be explicit (r6, guide §2.2/§2.5): a bare repartition(col) lets
+    * AQE coalesce by SHUFFLE BYTES, and sentence rows are tiny — at bench
+    * scale the whole detect stage was coalesced to ONE task, serializing
+    * the kernel on one core. Derived from the session (max of cluster
+    * cores and the configured shuffle width), never a constant: locally
+    * that is the core count; on a real cluster whatever parallelism the
+    * session is provisioned for.
+    */
+  def detectWidth(spark: SparkSession): Int =
+    math.max(
+      spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+
   def detectMentions(
       docs: Dataset[Doc],
       gazetteer: Iterable[(String, String)],
       numPartitions: Int = 0,
       feats: Option[graft.detect.Features.FeatureModel] = None): Dataset[Mention] = {
     val spark = docs.sparkSession
-    val sents0 = sentences(docs)
     // explicit repartition by doc_id hash (north_rule) — co-locates a doc's
     // sentences and evens the load before the CPU-bound detector.
-    // The partition COUNT must be explicit (r6, guide §2.2/§2.5): a bare
-    // repartition(col) lets AQE coalesce by SHUFFLE BYTES, and sentence
-    // rows are tiny — at bench scale the whole detect stage was coalesced
-    // to ONE task, serializing the kernel on one core. Width is derived
-    // from the session (max of cluster cores and the configured shuffle
-    // width), never a constant: locally that is the core count; on a real
-    // cluster whatever parallelism the session is provisioned for.
-    val width =
-      if (numPartitions > 0) numPartitions
-      else math.max(
-        spark.sparkContext.defaultParallelism,
-        spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-    val sents = sents0.repartition(width, col("doc_id"))
+    val width = if (numPartitions > 0) numPartitions else detectWidth(spark)
+    val sents = sentences(docs).repartition(width, col("doc_id"))
     val gazBc = Detector.broadcastGazetteer(spark, gazetteer)
     val featsBc = feats.map(spark.sparkContext.broadcast(_)).orNull
     Detector.detect(sents, gazBc, featsBc = featsBc)
@@ -112,72 +114,29 @@ object KgPipeline {
     // have been consumed (Verify/Bench clear the cache per query).
     val mentions = detectMentions(docs, gaz, numPartitions, feats)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // surface-level link resolution: the distinct (text, type) set is
-    // vocabulary-bounded, so linking it once and broadcasting the result
-    // back avoids any wide shuffle of the mention table.
-    //
-    // r6 DRIVER-LOCAL resolution path (guide §1.2 — the bench-scale cost
-    // of this stage was 4-5 scheduling round-trips over a few dozen
-    // rows): when the LEXICON is driver-resident (a LocalRelation — the
-    // vocab/fixture shape; a parquet-backed UMLS-scale lexicon is not)
-    // AND the distinct surface set passes a bounded-collect gate, the
-    // scorer runs on the driver via the SAME scalar kernels the codegen
-    // expressions call (Linker.surfaceResolutionLocal — equality
-    // asserted in PipelineSpec), and the resolution/edge tables become
-    // LocalRelations: the CC gate and both broadcast builds then cost
-    // ZERO jobs. Everything beyond the gates takes the distributed path
-    // unchanged. The gate action itself materializes the mentions cache
-    // (one job), which the former eager count() paid anyway.
-    val SurfaceGateCap = 1 << 18
-    val lexLocal: Option[Seq[LexiconEntry]] =
-      lexicon.queryExecution.optimizedPlan match {
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          Some(lexicon.collect().toSeq) // LocalTableScan: no job
-        case _ => None
-      }
-    val surfaces0 = mentions.select(col("text"), col("entity_type")).distinct()
-    val localRes: Option[Seq[(String, String, String, Double)]] = lexLocal.flatMap { lexRows =>
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val paySchema = StructType(Seq(
-        StructField("text", StringType, nullable = true),
-        StructField("entity_type", StringType, nullable = true)))
-      val agg = graft.ops.BoundedCollect.agg(SurfaceGateCap, paySchema)
-      val row = surfaces0.agg(agg(col("text"), col("entity_type")).as("_s"))
-        .select(col("_s.items").as("items"), col("_s.over").as("over")).head()
-      if (row.getBoolean(1)) None // over the gate: distributed path
-      else Some(Linker.surfaceResolutionLocal(
-        row.getSeq[org.apache.spark.sql.Row](0).map(r => (r.getString(0), r.getString(1))), lexRows))
-    }
-    val resolution = localRes match {
-      case Some(rows) =>
-        rows.toDF("text", "entity_type", "concept_id", "link_score") // LocalRelation
-      case None =>
-        Linker.surfaceResolution(surfaces0.as[(String, String)], lexicon)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    // surface-level link resolution (Linker.resolve picks the strategy):
+    // the distinct (text, type) set is vocabulary-bounded, so resolving it
+    // once and broadcasting the result back avoids any wide shuffle of
+    // the mention table. The resolve gate's job also materializes the
+    // mentions cache, which an eager count() would pay anyway.
+    val resolution = Linker.resolve(mentions.select(col("text"), col("entity_type")).distinct(), lexicon)
     val linked = mentions
       .join(broadcast(resolution), Seq("text", "entity_type"), "inner")
       .select(col("doc_id"), col("span_idx"), col("entity_type"), col("text"),
         col("start"), col("end"), col("confidence"), col("concept_id"), col("link_score"))
       .as[LinkedMention]
-    // canonicalization graph comes from the (tiny) resolution table, not
-    // from the mention table: surface node ↔ resolved concept node. On
-    // the driver-local path the distinct runs on the driver so the edge
-    // table is a LocalRelation and the CC gate is job-free.
-    val edges = localRes match {
-      case Some(rows) =>
-        rows.map { case (text, _, cid, _) => ("S:" + text, cid) }
-          .distinct.toDF("src", "dst") // LocalRelation
-      case None =>
-        resolution
-          .select(concat(lit("S:"), col("text")).as("src"), col("concept_id").as("dst"))
-          .distinct()
-    }
+    // canonicalization graph from the (tiny) resolution table, not from
+    // the mention table: surface node ↔ resolved concept node (a text
+    // under two types repeats its edge; Canon ignores duplicates). A
+    // projection of a LocalRelation stays one, so when the resolution is
+    // driver-built the CC gate costs no job.
+    val edges = resolution
+      .select(concat(lit("S:"), col("text")).as("src"), col("concept_id").as("dst"))
     val components = Canon.connectedComponents(edges)
     val triples = Triples.assemble(linked)
     val cleanup = () => {
       mentions.unpersist()
-      if (localRes.isEmpty) resolution.unpersist()
+      resolution.unpersist()
       components.unpersist() // final localCheckpoint of the CC loop
       ()
     }

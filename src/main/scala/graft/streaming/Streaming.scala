@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{Doc, Mention, Sentence}
+import graft.core.{Doc, Mention}
 import graft.detect.Detector
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -57,22 +57,14 @@ object Streaming {
       .as[Doc]
   }
 
-  /** The same sentence-explode + batched detector, applied to a stream —
+  /** The same sentence-explode + detector, applied to a stream —
     * stateless transformations compose identically in streaming plans.
     */
   def detectStream(
       docs: Dataset[Doc],
       gazBc: Broadcast[Detector.Gazetteer],
-      featsBc: Broadcast[graft.detect.Features.FeatureModel] = null): Dataset[Mention] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sentences = docs
-      .select($"doc_id", posexplode($"spans").as(Seq("span_idx", "span")))
-      .filter($"span.kind" === "text" && length($"span.text") > 0)
-      .select($"doc_id", $"span_idx", $"span.text".as("text"))
-      .as[Sentence]
-    Detector.detect(sentences, gazBc, featsBc = featsBc)
-  }
+      featsBc: Broadcast[graft.detect.Features.FeatureModel] = null): Dataset[Mention] =
+    Detector.detect(graft.pipeline.KgPipeline.sentences(docs), gazBc, featsBc = featsBc)
 
   /** Drain-available-now writer: processes everything currently in the
     * source, checkpoints, and terminates. Incremental by construction.

@@ -51,6 +51,23 @@ class LargeGazetteerSpec extends AnyFunSuite {
     assert(partitionedPath == broadcastPath)
   }
 
+  test("a null gazetteer surface fails loudly on both detect paths") {
+    import spark.implicits._
+    val sents = KgPipeline.sentences(docs(20))
+    val gaz = DocsGen.vocabEntries :+ ((null: String) -> "Drug")
+    def namesEntry(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+        case iae: IllegalArgumentException => iae.getMessage.contains("(null,Drug)")
+        case _ => false
+      }
+    val onBroadcast = intercept[Exception](
+      Detector.detect(sents, Detector.broadcastGazetteer(spark, gaz)).collect())
+    assert(namesEntry(onBroadcast), s"broadcast path: $onBroadcast")
+    val onPartitioned = intercept[Exception](
+      Detector.detectPartitionedGazetteer(sents, gaz.toDS()).collect())
+    assert(namesEntry(onPartitioned), s"partitioned path: $onPartitioned")
+  }
+
   test("partitioned path with the feature model also matches the broadcast path") {
     import spark.implicits._
     val g = DocsGen.gen(spark, 100, seed = 42L)

@@ -7,6 +7,7 @@ import graft.data.{DocsGen, Lexicon}
 import graft.link.Linker
 import graft.metrics.SpanMetrics
 import graft.pipeline.KgPipeline
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 class PipelineSpec extends AnyFunSuite {
@@ -29,24 +30,93 @@ class PipelineSpec extends AnyFunSuite {
     g.unpersist()
   }
 
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3))).toSet
+
+  /** The vocab lexicon written to parquet and read back: distributed, so
+    * `Linker.resolve` cannot score it on the driver.
+    */
+  private def parquetLexicon(lex: Dataset[LexiconEntry]): Dataset[LexiconEntry] = {
+    val spark2 = spark
+    import spark2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("lexicon").toString + "/lex.parquet"
+    lex.write.parquet(dir)
+    spark.read.parquet(dir).as[LexiconEntry]
+  }
+
   test("driver-local surface resolution equals the distributed scorer bit-for-bit") {
     val spark2 = spark
     import spark2.implicits._
     val lex = lexiconFromVocab().cache()
     val lexRows = lex.collect().toSeq
+    val parquetLex = parquetLexicon(lex)
     // vocab surfaces (exact matches), unknown-but-prefix-sharing surfaces
     // (candidates via blocking keys, no exact boost), fully unknown and
-    // empty surfaces (S: fallback), and a wrong-type probe
+    // empty surfaces (S: fallback), and wrong-type probes
     val surfaces: Seq[(String, String)] =
       DocsGen.vocabEntries ++ Seq(
         ("高血压", "Diseases"), ("高血压病史", "Diseases"), ("胃", "Anatomical"),
-        ("阿司", "Drug"), ("zz", "Drug"), ("", "Diseases"), ("高血压病", "Drug"))
-    val local = Linker.surfaceResolutionLocal(surfaces, lexRows)
-      .map { case (t, tp, c, s) => (t, tp, c, s) }.toSet
-    val dist = Linker.surfaceResolution(surfaces.toDS(), lex).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3))).toSet
-    assert(local == dist) // exact doubles, exact concept ids
+        ("阿司", "Drug"), ("zz", "Drug"), ("", "Diseases"), ("高血压病", "Drug"),
+        ("完全未知表面", "Diseases"), ("胃", "Anatomy"))
+    val reference = Linker.surfaceResolutionLocal(surfaces, lexRows).toSet
+    val strategies = Seq(
+      "broadcast lexicon" -> Linker.surfaceResolution(surfaces.toDS(), lex),
+      "broadcast surfaces" -> Linker.surfaceResolutionLargeLexicon(surfaces.toDS(), lex),
+      "resolve, parquet lexicon" -> Linker.resolve(surfaces.toDF("text", "entity_type"), parquetLex))
+    strategies.foreach { case (name, df) =>
+      assert(rows(df) == reference, s"$name differs from the driver-local reference")
+    } // exact doubles, exact concept ids
+    // broadcast surfaces REVERSES the build side: the broadcast feeds the
+    // surface set, the lexicon streams (BuildRight — surfaces are the
+    // join's right operand)
+    val p = Linker.surfaceResolutionLargeLexicon(surfaces.toDS(), lex)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("BroadcastHashJoin") && p.contains("BuildRight"),
+      "surface set is not the broadcast build side")
     lex.unpersist()
+  }
+
+  test("a parquet lexicon gives the LocalRelation lexicon's triples without broadcasting the lexicon") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val g = DocsGen.gen(spark, 200, seed = 5).cache()
+    val docs = DocsGen.docs(g)
+    val lex = lexiconFromVocab()
+    assert(graft.ops.BoundedCollect.isLocal(lex))
+    def triples(ds: Dataset[Triple]) = ds.collect().map(t => (t.subj, t.pred, t.obj, t.doc_id)).toSeq.sorted
+    val local = triples(KgPipeline.run(docs, lex))
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val run = KgPipeline.run(docs, parquetLexicon(lex))
+    val distributed = try {
+      val t = triples(run)
+      // events arrive in order: once the final collect is seen, all are
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+        assert(plans.contains(run.queryExecution))
+      }
+      t
+    } finally spark.listenerManager.unregister(listener)
+    assert(distributed == local && local.nonEmpty)
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val all = plans.toArray(Array.empty[QueryExecution]).toSeq.flatMap(qe => nodes(qe.executedPlan))
+    assert(all.exists(_.isInstanceOf[FileSourceScanExec]), "the parquet lexicon was never scanned")
+    assert(!all.exists {
+      case b: BroadcastExchangeExec => nodes(b).exists(_.isInstanceOf[FileSourceScanExec])
+      case _ => false
+    }, "the parquet lexicon was broadcast")
+    g.unpersist()
   }
 
   test("linker links exact-surface mentions to their lexicon concept") {

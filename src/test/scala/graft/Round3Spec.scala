@@ -602,9 +602,9 @@ class Round3Spec extends AnyFunSuite {
     val g = DocsGen.gen(spark, 150, seed = 9)
     def conceptSet(l: org.apache.spark.sql.Dataset[graft.core.LinkedMention]) =
       l.collect().map(x => (x.doc_id, x.span_idx, x.start, x.concept_id)).toSet
-    val base = conceptSet(Linker.linkBySurface(
+    val base = conceptSet(Linker.link(
       DocsGen.goldMentions(g), Lexicon.fromSurfaces(DocsGen.vocabEntries.toDS())))
-    val real = conceptSet(Linker.linkBySurface(DocsGen.goldMentions(g), lex128, ctxDim = dim))
+    val real = conceptSet(Linker.link(DocsGen.goldMentions(g), lex128, ctxDim = dim))
     assert(real == base && real.nonEmpty, "concept assignment changed under the real embedding table")
 
     // measured broadcast-size cut from int8 quantization at dim 128:
@@ -623,7 +623,7 @@ class Round3Spec extends AnyFunSuite {
     assert(fullBytes.toDouble / quantBytes > 1.8, s"entry cut only ${fullBytes.toDouble / quantBytes}x")
 
     // and the quantize→dequantize round trip preserves the assignment
-    val viaQuant = conceptSet(Linker.linkBySurface(
+    val viaQuant = conceptSet(Linker.link(
       DocsGen.goldMentions(g), Lexicon.dequantize(Lexicon.quantize(lex128)), ctxDim = dim))
     assert(viaQuant == base)
     lex128.unpersist()
