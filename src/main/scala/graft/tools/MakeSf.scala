@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of a testdata SF dir: each table becomes
@@ -26,14 +26,7 @@ object MakeSf {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorStr) = args
     val factor = factorStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(s"local[${Tools.cores}]", Tools.cores)
 
     def copies(df: DataFrame)(remap: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until factor).map(c => remap(df, c)).reduce(_.unionByName(_))

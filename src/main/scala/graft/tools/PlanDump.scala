@@ -1,8 +1,5 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for the headline queries into PLANS.md —
   * the auditable record of the plan-quality claims (broadcasts where
   * broadcasts belong, partial aggregation instead of windows, pushed
@@ -72,14 +69,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = PlanFiles.session()
 
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
@@ -97,15 +87,10 @@ object PlanDump {
     sb.append("  broadcast 5-row probe list — both sides aggregate-bounded, never\n")
     sb.append("  data-sized.\n")
     Queries.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        val plan =
-          try fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          catch { case e: Throwable => s"(failed: $e)" }
+      PlanFiles.formatted(spark, sfDir, name).foreach { plan =>
         sb.append(s"\n## $name\n\n```\n")
-        sb.append(plan.trim)
+        sb.append(plan)
         sb.append("\n```\n")
-        spark.catalog.clearCache()
       }
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)

@@ -27,11 +27,9 @@ object ScalingBench {
     val n = if (args.length > 2) args(2).toInt else 8
     val mode = if (args.length > 3) args(3) else "local"
     val levels = Seq(n, n * 4)
-    // tmpfs for staged input AND shuffle spill: the sandbox VM's disk is
-    // shared/slow and would turn every shuffle I/O-bound; a real cluster
-    // has local NVMe per executor
-    val shmBase = "/dev/shm/graft"
-    val staged = s"$shmBase/scaling_docs_$nDocs"
+    // staged input on tmpfs, next to the builder's shuffle dir: a real
+    // cluster has local NVMe per executor
+    val staged = s"/dev/shm/graft/scaling_docs_$nDocs"
 
     val appJar = "target/scala-2.13/medicalnamedentityrecognitionspark_2.13-0.1.0.jar"
     val execJavaOpts = Seq(
@@ -41,25 +39,13 @@ object ScalingBench {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
       "java.base/sun.util.calendar").map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
 
-    def newSession(cpus: Int): SparkSession = {
-      val coresPerExec = 4
-      val builder = SparkSession.builder()
-        .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.local.dir", s"$shmBase/local")
-        .config("spark.ui.enabled", "false")
-      val s = (if (mode == "cluster")
-        builder
-          .master(s"local-cluster[${cpus / coresPerExec},$coresPerExec,6144]")
-          .config("spark.jars", new java.io.File(appJar).getAbsolutePath)
-          .config("spark.executor.memory", "5g")
-          .config("spark.executor.extraJavaOptions", execJavaOpts)
-      else
-        builder.master(s"local[$cpus]")).getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
+    def newSession(cpus: Int): SparkSession =
+      if (mode == "cluster")
+        Tools.session(s"local-cluster[${cpus / 4},4,6144]", cpus * 2,
+          "spark.jars" -> new java.io.File(appJar).getAbsolutePath,
+          "spark.executor.memory" -> "5g",
+          "spark.executor.extraJavaOptions" -> execJavaOpts)
+      else Tools.session(s"local[$cpus]", cpus * 2)
 
     // stage docs once (not timed)
     {
@@ -71,44 +57,29 @@ object ScalingBench {
       spark.stop()
     }
 
-    /** Hypervisor steal (cpu-seconds) from /proc/stat — this sandbox runs
-      * on a shared host where neighbors steal multiple cores in bursts;
-      * wall times must be reported alongside the steal they absorbed.
-      */
-    def stealSec(): Double = {
-      val line = scala.io.Source.fromFile("/proc/stat").getLines().next()
-      line.trim.split("\\s+")(8).toDouble / 100.0
-    }
+    /** Machine-wide hypervisor steal in cpu-seconds (jiffies are 1/100 s). */
+    def stealSec(): Double = Tools.cpuJiffies()._2 / 100.0
 
     case class RunResult(triples: Long, wallSec: Double, stealSec: Double, cpuSec: Double, gcSec: Double)
 
-    def once(spark: SparkSession, cpus: Int): RunResult = {
+    // task-level CPU and GC from the listener: a scale-invariant work measure
+    def once(spark: SparkSession, listener: StageListener, cpus: Int, group: String): RunResult = {
       import spark.implicits._
       val lex = Lexicon.fromSurfaces(DocsGen.vocabEntries.toDS()).cache()
       lex.count()
       val docs = spark.read.parquet(staged).as[graft.core.Doc]
-      // task-level CPU accounting via listener (scale-invariant work measure)
-      val cpu = new java.util.concurrent.atomic.AtomicLong()
-      val gc = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (te.taskMetrics != null) {
-            cpu.addAndGet(te.taskMetrics.executorCpuTime) // ns
-            gc.addAndGet(te.taskMetrics.jvmGCTime) // ms
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
       val st0 = stealSec()
       val t0 = System.nanoTime()
-      val (triplesDs, cleanup) = KgPipeline.runWithCleanup(docs, lex, numPartitions = cpus * 2)
-      val nTriples = triplesDs.count()
+      val (nTriples, cleanup) = listener.inGroup(group) {
+        val (triples, cleanup) = KgPipeline.runWithCleanup(docs, lex, numPartitions = cpus * 2)
+        (triples.count(), cleanup)
+      }
       val wall = (System.nanoTime() - t0) / 1e9
       val steal = stealSec() - st0
       cleanup()
-      spark.sparkContext.removeSparkListener(listener)
       spark.catalog.clearCache()
-      RunResult(nTriples, wall, steal, cpu.get() / 1e9, gc.get() / 1e3)
+      val stats = listener.stats(group)
+      RunResult(nTriples, wall, steal, stats.cpuS, stats.gcS)
     }
 
     /** Raw-compute control: a register-only burn at `threads` parallelism,
@@ -157,14 +128,15 @@ object ScalingBench {
     val blocks = 2
     val perBlock = math.max(1, (runs + blocks - 1) / blocks)
     rawBurn(levels.max) // JIT the burn loop itself
-    for (_ <- 0 until blocks) {
+    for (block <- 0 until blocks) {
       for (cpus <- levels) {
         burns(cpus) = burns(cpus) :+ rawBurn(cpus)
         val spark = newSession(cpus)
+        val listener = new StageListener(spark.sparkContext)
         waitForExecutors(spark, cpus)
-        once(spark, cpus) // warm-up, untimed
-        for (_ <- 0 until perBlock) {
-          val r = once(spark, cpus)
+        once(spark, listener, cpus, s"warm-$cpus-$block") // untimed
+        for (i <- 0 until perBlock) {
+          val r = once(spark, listener, cpus, s"run-$cpus-$block-$i")
           triples = r.triples
           results(cpus) = results(cpus) :+ r
         }
@@ -175,17 +147,14 @@ object ScalingBench {
       }
     }
 
-    def fmt(xs: Vector[Double]): String = xs.map(s => f"$s%.2f").mkString("[", ",", "]")
-    def median(xs: Vector[Double]): Double = xs.sorted.apply(xs.length / 2)
+    import Tools.median
+    def fmt(xs: Vector[Double]): String = Tools.json(xs)
     // steal-adjusted wall: subtract this VM's share of hypervisor steal
-    // (steal is machine-wide cpu-seconds over 32 host cores)
-    def adj(r: RunResult): Double = math.max(r.wallSec - r.stealSec / 32.0, r.wallSec * 0.2)
-    val byLevel = levels.map { c =>
-      val rs = results(c)
-      c -> ((median(rs.map(_.wallSec)), rs.map(adj).min, median(rs.map(_.cpuSec))))
-    }.toMap
-    val (mN, bestN, cpuN) = byLevel(levels(0))
-    val (m4N, best4N, cpu4N) = byLevel(levels(1))
+    // (steal is machine-wide cpu-seconds over the host's cores)
+    val hostCores = Runtime.getRuntime.availableProcessors
+    def adj(r: RunResult): Double = math.max(r.wallSec - r.stealSec / hostCores, r.wallSec * 0.2)
+    val Seq((mN, bestN), (m4N, best4N)) =
+      levels.map(c => (median(results(c).map(_.wallSec)), results(c).map(adj).min))
     val effMedian = (mN / m4N) / 4.0
     val effBestAdj = (bestN / best4N) / 4.0
     val burnN = median(burns(levels(0)))

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.data.{DocsGen, Lexicon}
 import graft.pipeline.KgPipeline
-import org.apache.spark.sql.SparkSession
 
 /** Skew-robustness evidence (r2 VERDICT next-step #8): the full KG
   * pipeline over a UNIFORM corpus vs a deliberately SKEWED corpus (one
@@ -16,26 +15,17 @@ import org.apache.spark.sql.SparkSession
   * uniform. Prints one JSON line with both walls and the ratio.
   *
   * Usage: sbt "runMain graft.tools.SkewBench [nDocs] [runs] [cores] [hubFrac]"
-  * (defaults 1000000, 3, 32, 0.3)
+  * (defaults 1000000, 3, SPARK_GRAFT_CPUS or the host's cores, 0.3)
   */
 object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 1000000L
     val runs = if (args.length > 1) args(1).toInt else 3
-    val cpus = if (args.length > 2) args(2).toInt else 32
+    val cpus = if (args.length > 2) args(2).toInt else Tools.cores
     val hubFrac = if (args.length > 3) args(3).toDouble else 0.3
-    val shmBase = "/dev/shm/graft"
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.local.dir", s"$shmBase/local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tools.session(s"local[$cpus]", cpus * 2)
     import spark.implicits._
 
     val variants = Seq(
@@ -45,7 +35,7 @@ object SkewBench {
     // stage both corpora once (untimed), same doc count and seed — the
     // ONLY difference is the forced hub surface
     val staged = variants.map { case (name, frac) =>
-      val path = s"$shmBase/skew_${name}_$nDocs"
+      val path = s"/dev/shm/graft/skew_${name}_$nDocs"
       if (!new java.io.File(s"$path/_SUCCESS").exists()) {
         DocsGen.docs(DocsGen.gen(spark, nDocs, seed = 42L, partitions = 64, hubFrac = frac))
           .write.mode("overwrite").parquet(path)
@@ -56,52 +46,19 @@ object SkewBench {
     val lex = Lexicon.fromSurfaces(DocsGen.vocabEntries.toDS()).cache()
     lex.count()
 
-    // per-stage task-time skew: the listener-level evidence that no hub
-    // key concentrates work on one task (max/median task time per stage).
-    // Listener events arrive ASYNCHRONOUSLY on the bus, so runs must not
-    // share mutable state via clear() (ADVICE r3: late events from run N
-    // land after run N+1 started and get misattributed). Instead each
-    // run gets a unique job group; onJobStart pins every stage id to its
-    // group, and skew is computed AFTER all runs from the per-group
-    // stage sets — late delivery can no longer cross runs.
-    val stageTimes = new java.util.concurrent.ConcurrentHashMap[Int, Vector[Long]]()
-    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) js.stageIds.foreach(sid => stageGroup.put(sid, g))
-      }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null)
-          stageTimes.merge(te.stageId, Vector(te.taskInfo.duration), _ ++ _)
-    }
-    spark.sparkContext.addSparkListener(listener)
+    // per-stage task-time skew (max/median task time per stage): the
+    // listener-level evidence that no hub key concentrates work on one
+    // task. Each run has its own job group, so late events cannot cross runs.
+    val listener = new StageListener(spark.sparkContext)
 
-    def once(path: String, group: String): (Long, Double) = {
-      spark.sparkContext.setJobGroup(group, s"skew-bench $group", interruptOnCancel = false)
-      try {
-        val docs = spark.read.parquet(path).as[graft.core.Doc]
-        val t0 = System.nanoTime()
-        val (triples, cleanup) = KgPipeline.runWithCleanup(docs, lex, numPartitions = cpus * 2)
-        val n = triples.count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        cleanup()
-        (n, wall)
-      } finally spark.sparkContext.clearJobGroup()
-    }
-
-    // worst max/median task-time ratio across this group's stages with
-    // enough tasks to make a ratio meaningful (a hub key shows up here)
-    def skewOf(group: String): Double = {
-      import scala.jdk.CollectionConverters._
-      stageGroup.asScala.collect { case (sid, g) if g == group => sid }
-        .flatMap(sid => Option(stageTimes.get(sid)))
-        .filter(_.size >= 8)
-        .map { ts =>
-          val s = ts.sorted
-          s.last.toDouble / math.max(s(s.size / 2), 1L)
-        }
-        .maxOption.getOrElse(1.0)
+    def once(path: String, group: String): (Long, Double) = listener.inGroup(group) {
+      val docs = spark.read.parquet(path).as[graft.core.Doc]
+      val t0 = System.nanoTime()
+      val (triples, cleanup) = KgPipeline.runWithCleanup(docs, lex, numPartitions = cpus * 2)
+      val n = triples.count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      cleanup()
+      (n, wall)
     }
 
     // one untimed warm-up per variant, then interleaved timed runs
@@ -116,12 +73,9 @@ object SkewBench {
       walls(name) = walls(name) :+ w
       groups(name) = groups(name) :+ g
     }
-    // drain the listener bus before sampling task times: events for the
-    // final tasks may still be in flight when count() returns
-    Thread.sleep(2000)
-    val skews = groups.map { case (name, gs) => name -> gs.map(skewOf) }
-    def median(xs: Vector[Double]): Double = xs.sorted.apply(xs.length / 2)
-    def fmt(xs: Vector[Double]): String = xs.map(w => f"$w%.2f").mkString("[", ",", "]")
+    val skews = groups.map { case (name, gs) => name -> gs.map(listener.stats(_).taskSkew) }
+    import Tools.median
+    def fmt(xs: Vector[Double]): String = Tools.json(xs)
     val mu = median(walls("uniform"))
     val ms = median(walls("skewed"))
     // normalize by triples produced: the skewed corpus yields a different

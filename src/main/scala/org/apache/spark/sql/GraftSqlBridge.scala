@@ -72,6 +72,13 @@ object GraftSqlBridge {
     conv(c.node)
   }
 
+  /** Block until the listener bus has delivered every event posted so far
+    * (the bus is `private[spark]`): listener events arrive asynchronously,
+    * so task metrics read before this can miss the last tasks of an
+    * action that already returned.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Register a function builder under a name in the session registry. */
   def registerFunction(
       spark: SparkSession,

@@ -193,6 +193,15 @@ class FunctionsSpec extends AnyFunSuite {
     assert(!full.contains("InMemoryTableScan"), "minhashPairs silently persists again")
   }
 
+  test("no registered query plans a Scala UDF") {
+    val withUdf = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (_, fn) =>
+      val p = fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
+      spark.catalog.clearCache()
+      p.contains("ScalaUDF")
+    }.map(_._1)
+    assert(withUdf.isEmpty, s"queries planning a ScalaUDF: ${withUdf.mkString(", ")}")
+  }
+
   test("GraftExtensions injects vec_dot into a session at build time") {
     val base = spark // ensure the shared context exists first
     org.apache.spark.sql.SparkSession.clearActiveSession()
