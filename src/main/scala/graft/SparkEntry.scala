@@ -222,9 +222,10 @@ object SparkEntry {
         .orderBy("doc_id", "span_idx", "start")
     }),
     "kg_mentions_partitioned" -> ((s, dir) => {
-      // the LARGE-GAZETTEER detect path under the gate: the gazetteer
-      // stays a DISTRIBUTED dataset (no broadcast) and candidates reach
-      // each sentence through the leading-bigram blocking-key equi-join;
+      // the LARGE-GAZETTEER detect strategy, called directly (Detector.detect
+      // would broadcast this small gazetteer): the gazetteer stays a
+      // DISTRIBUTED dataset (no broadcast) and candidates reach each
+      // sentence through the leading-bigram blocking-key equi-join;
       // output must equal kg_mentions exactly, so it shares that oracle.
       import s.implicits._
       val (_, docs) = goldAndDocs(s, dir)
@@ -232,7 +233,7 @@ object SparkEntry {
       // task on tiny shuffles
       val sents = KgPipeline.sentences(docs).repartition(KgPipeline.detectWidth(s), col("doc_id"))
       graft.detect.Detector
-        .detectPartitionedGazetteer(sents, DocsGen.vocabEntries.toDS())
+        .detectPartitioned(sents, DocsGen.vocabEntries.toDS())
         .toDF()
         .withColumn("confidence", round(col("confidence"), 6))
         .orderBy("doc_id", "span_idx", "start")

@@ -85,12 +85,8 @@ object Triples {
     // the adaptive-CC driver path returns a LocalRelation — its size is
     // free on the driver, so don't schedule a count() job for it (r6);
     // checkpointed loop outputs still pay the (cheap, materialized) count
-    val localSize = comp0.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(lr.data.length.toLong)
-      case _ => None
-    }
-    val comp =
-      if (localSize.getOrElse(comp0.count()) <= broadcastThreshold) broadcast(comp0) else comp0
+    val size = graft.ops.BoundedCollect.localSize(comp0).getOrElse(comp0.count())
+    val comp = if (size <= broadcastThreshold) broadcast(comp0) else comp0
     triples
       .join(comp.withColumnRenamed("node", "subj").withColumnRenamed("component", "subj_c"), Seq("subj"), "left")
       .join(comp.withColumnRenamed("node", "obj").withColumnRenamed("component", "obj_c"), Seq("obj"), "left")

@@ -26,7 +26,8 @@ object Interactive {
       formats: Seq[String]): Unit = {
     require(formats.nonEmpty && formats.forall(Set("json", "markup", "bio")),
       s"formats must be json|markup|bio, got $formats")
-    val gazBc = graft.detect.Detector.broadcastGazetteer(spark, graft.data.DocsGen.vocabEntries)
+    import spark.implicits._
+    val gazetteer = graft.data.DocsGen.vocabEntries.toDS()
     out.println(banner)
     var quit = false
     while (!quit) {
@@ -43,7 +44,7 @@ object Interactive {
           else texts += t
         }
       }
-      if (texts.nonEmpty) predictBatch(spark, texts.toSeq, out, formats, gazBc)
+      if (texts.nonEmpty) predictBatch(spark, texts.toSeq, out, formats, gazetteer)
     }
     out.println("bye")
   }
@@ -54,13 +55,13 @@ object Interactive {
       texts: Seq[String],
       out: java.io.PrintStream,
       formats: Seq[String],
-      gazBc: org.apache.spark.broadcast.Broadcast[graft.detect.Detector.Gazetteer]): Unit = {
+      gazetteer: org.apache.spark.sql.Dataset[(String, String)]): Unit = {
     val tmp = java.nio.file.Files.createTempFile("graft_interactive", ".txt")
     try {
       java.nio.file.Files.write(tmp, texts.mkString("\n").getBytes(UTF_8))
       val sentences = graft.data.BioCorpus.readRawText(spark, tmp.toString)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val mentions = graft.detect.Detector.detect(sentences, gazBc)
+      val mentions = graft.detect.Detector.detect(sentences, gazetteer)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       formats.foreach { fmt =>
         val (df, column) = fmt match {

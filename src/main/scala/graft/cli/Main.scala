@@ -156,9 +156,7 @@ object Main {
       }
       val sentences = graft.data.BioCorpus.readRawText(spark, args.docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val gazBc = graft.detect.Detector.broadcastGazetteer(spark, DocsGen.vocabEntries)
-      val mentions = graft.detect.Detector.detect(sentences, gazBc,
-        featsBc = featsOpt.map(spark.sparkContext.broadcast(_)).orNull)
+      val mentions = graft.detect.Detector.detect(sentences, DocsGen.vocabEntries.toDS(), feats = featsOpt)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       formats.foreach { fmt =>
         val (df, column) = fmt match {
@@ -211,11 +209,10 @@ object Main {
       // incremental mention detection: drain whatever is currently in the
       // docs directory, checkpoint, exit; re-running processes only new files
       require(!args.docs.startsWith("synth:"), "--stream needs a docs directory")
-      val gazBc = graft.detect.Detector.broadcastGazetteer(spark, DocsGen.vocabEntries)
       val q = graft.streaming.Streaming.availableNowToParquet(
         graft.streaming.Streaming.detectStream(
-          graft.streaming.Streaming.docsStream(spark, args.docs), gazBc,
-          featsBc = featsOpt.map(spark.sparkContext.broadcast(_)).orNull),
+          graft.streaming.Streaming.docsStream(spark, args.docs), DocsGen.vocabEntries.toDS(),
+          feats = featsOpt),
         s"${args.out}/mentions", s"${args.out}/checkpoint")
       q.awaitTermination()
       spark.read.parquet(s"${args.out}/mentions").count()

@@ -59,16 +59,16 @@ object Lexicon {
     // the comparator delegates to UTF8String.compareTo, the exact
     // ordering Spark's string sort uses (UTF-8 byte order — Scala's
     // String.compareTo differs on supplementary characters).
-    val isLocal = surfaces.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
-    }
-    if (isLocal) {
-      def u8(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    // Nulls order first, as in the distributed orderBy.
+    if (graft.ops.BoundedCollect.isLocal(surfaces)) {
+      def cmp(a: String, b: String): Int =
+        if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+        else org.apache.spark.unsafe.types.UTF8String.fromString(a)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
       val entries = surfaces.collect() // LocalTableScan: no job
         .sortWith { case ((s1, t1), (s2, t2)) =>
-          val c = u8(t1).compareTo(u8(t2))
-          if (c != 0) c < 0 else u8(s1).compareTo(u8(s2)) < 0
+          val c = cmp(t1, t2)
+          if (c != 0) c < 0 else cmp(s1, s2) < 0
         }
         .zipWithIndex.map { case ((surface, tpe), i) =>
           val cid = f"C${i + 1}%07d"
@@ -158,8 +158,9 @@ object Lexicon {
       e.qembedding.map(b => b * e.scale)))
   }
 
-  /** Gazetteer view for the detector: surface → type. Collected to the
-    * driver for broadcast (the lexicon is the designated broadcast side).
+  /** Gazetteer view of the lexicon, (surface, type), collected to the
+    * driver. The pipeline itself hands [[Detector.detect]] the lexicon's
+    * two columns, which collects them only when they fit its gate.
     */
   def gazetteerEntries(lex: Dataset[LexiconEntry]): Array[(String, String)] = {
     // select() instead of a typed map (r6): a column-level Project over a

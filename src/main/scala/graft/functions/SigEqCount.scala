@@ -14,6 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * banding join's hottest loop; this is one fused counting loop in
   * whole-stage codegen, zero allocation.
   *
+  * A position where either slot is null never counts, as a null `x = y`
+  * never counted in the old sum.
+  *
   * Arithmetic equivalence: the old sum of 1.0/0.0 doubles is exactly
   * integer-valued (no rounding below 2^53), so `count / k` equals the
   * old `sum / k` bit for bit.
@@ -35,7 +38,7 @@ case class SigEqCount(left: Expression, right: Expression)
     var eq = 0L
     var i = 0
     while (i < n) {
-      if (x.getLong(i) == y.getLong(i)) eq += 1L
+      if (!x.isNullAt(i) && !y.isNullAt(i) && x.getLong(i) == y.getLong(i)) eq += 1L
       i += 1
     }
     eq
@@ -50,7 +53,7 @@ case class SigEqCount(left: Expression, right: Expression)
          |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
          |long $eq = 0L;
          |for (int $i = 0; $i < $n; $i++) {
-         |  if ($x.getLong($i) == $y.getLong($i)) $eq++;
+         |  if (!$x.isNullAt($i) && !$y.isNullAt($i) && $x.getLong($i) == $y.getLong($i)) $eq++;
          |}
          |${ev.value} = $eq;
        """.stripMargin

@@ -33,11 +33,16 @@ private[graft] class BoundedCollectAgg(cap: Int, inSchema: StructType)
     StructField("over", BooleanType, nullable = false)))
   private val overRow: Row = Row(Seq.empty[Row], true)
   override def zero: Row = Row(scala.collection.mutable.ArrayBuffer.empty[Row], false)
+  // the buffer's items as stored, not `Row.getSeq`, which copies a
+  // mutable buffer into an immutable Seq on every call: O(n) per reduce(),
+  // O(n²) per group
+  private def items(b: Row): scala.collection.Seq[Row] =
+    b.get(0).asInstanceOf[scala.collection.Seq[Row]]
   override def reduce(b: Row, a: Row): Row = {
     if (b.getBoolean(1)) return b
-    val items = b.getSeq[Row](0)
-    if (items.length >= cap) overRow
-    else items match {
+    val xs = items(b)
+    if (xs.length >= cap) overRow
+    else xs match {
       // in-place append on the warm path: the buffer object lives across
       // reduce() calls, so the ArrayBuffer append is O(1) amortized (an
       // immutable `:+` would be O(n) per row — O(n²) per hot key)
@@ -51,8 +56,8 @@ private[graft] class BoundedCollectAgg(cap: Int, inSchema: StructType)
   override def merge(a: Row, b: Row): Row = {
     if (a.getBoolean(1)) return a
     if (b.getBoolean(1)) return b
-    val xs = a.getSeq[Row](0)
-    val ys = b.getSeq[Row](0)
+    val xs = items(a)
+    val ys = items(b)
     if (xs.length + ys.length > cap) overRow
     else if (ys.isEmpty) a
     else if (xs.isEmpty) b
@@ -70,22 +75,30 @@ private[graft] object BoundedCollect {
   def agg(cap: Int, inSchema: StructType): org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(new BoundedCollectAgg(cap, inSchema), Encoders.row(inSchema))
 
-  /** True when the plan is a driver-resident LocalRelation: collecting it
-    * runs a LocalTableScan on the driver, no job.
+  /** The row count of a driver-resident LocalRelation plan, read without
+    * a job (collecting it runs a LocalTableScan on the driver); None for
+    * any other plan.
     */
-  def isLocal(ds: Dataset[_]): Boolean =
-    ds.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  def localSize(ds: Dataset[_]): Option[Long] =
+    ds.queryExecution.optimizedPlan match {
+      case lr: LocalRelation => Some(lr.data.length.toLong)
+      case _ => None
+    }
+
+  def isLocal(ds: Dataset[_]): Boolean = localSize(ds).isDefined
 
   /** The adaptive gate: all rows of `df` when there are at most `cap` of
-    * them, else None. A LocalRelation costs no job; any other plan costs
-    * ONE bounded-aggregate job, in which an over-cap input collapses to
-    * the overflow flag instead of shipping rows.
+    * them, else None. A LocalRelation costs no job, and is not collected
+    * when over the cap; any other plan costs ONE bounded-aggregate job, in
+    * which an over-cap input collapses to the overflow flag instead of
+    * shipping rows.
     */
   def collect(df: DataFrame, cap: Int): Option[Seq[Row]] =
-    if (isLocal(df)) Some(df.collect().toSeq).filter(_.length <= cap)
-    else {
-      val row = df.agg(agg(cap, df.schema)(df.columns.map(col).toSeq: _*).as("_b"))
-        .select(col("_b.items"), col("_b.over")).head()
-      if (row.getBoolean(1)) None else Some(row.getSeq[Row](0))
+    localSize(df) match {
+      case Some(n) => if (n <= cap) Some(df.collect().toSeq) else None
+      case None =>
+        val row = df.agg(agg(cap, df.schema)(df.columns.map(col).toSeq: _*).as("_b"))
+          .select(col("_b.items"), col("_b.over")).head()
+        if (row.getBoolean(1)) None else Some(row.getSeq[Row](0))
     }
 }

@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.assemble.Triples
 import graft.canon.Canon
 import graft.core._
-import graft.data.Lexicon
 import graft.detect.Detector
 import graft.link.Linker
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
   *     → explode text spans (media spans pass through untouched — the
   *       span-sequence invariant is checked by `spanSignature`)
   *     → repartition by hash(doc_id)                  [north_rule]
-  *     → mapPartitions mention detector               [Detector]
+  *     → mention detector, gazetteer broadcast or joined [Detector.detect]
   *     → surface resolution, broadcast back           [Linker.resolve]
   *     → connected-components canonicalization        [Canon]
   *     → relation assembly → triples                  [Triples]
@@ -72,14 +71,19 @@ object KgPipeline {
       gazetteer: Iterable[(String, String)],
       numPartitions: Int = 0,
       feats: Option[graft.detect.Features.FeatureModel] = None): Dataset[Mention] = {
-    val spark = docs.sparkSession
+    import docs.sparkSession.implicits._
+    mentionsOf(docs, gazetteer.toSeq.toDS(), numPartitions, feats)
+  }
+
+  private def mentionsOf(
+      docs: Dataset[Doc],
+      gazetteer: Dataset[(String, String)],
+      numPartitions: Int,
+      feats: Option[graft.detect.Features.FeatureModel]): Dataset[Mention] = {
     // explicit repartition by doc_id hash (north_rule) — co-locates a doc's
     // sentences and evens the load before the CPU-bound detector.
-    val width = if (numPartitions > 0) numPartitions else detectWidth(spark)
-    val sents = sentences(docs).repartition(width, col("doc_id"))
-    val gazBc = Detector.broadcastGazetteer(spark, gazetteer)
-    val featsBc = feats.map(spark.sparkContext.broadcast(_)).orNull
-    Detector.detect(sents, gazBc, featsBc = featsBc)
+    val width = if (numPartitions > 0) numPartitions else detectWidth(docs.sparkSession)
+    Detector.detect(sentences(docs).repartition(width, col("doc_id")), gazetteer, feats = feats)
   }
 
   /** Full pipeline: docs + lexicon → canonicalized triples. Internal
@@ -105,14 +109,14 @@ object KgPipeline {
       feats: Option[graft.detect.Features.FeatureModel] = None): (Dataset[Triple], () => Unit) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val gaz = Lexicon.gazetteerEntries(lexicon)
     // the detector is the CPU-dominant stage: persist its output so the
     // surfaces-distinct job (materialized below) and the main linked-join
     // job run it ONCE, not twice (r1 VERDICT "What's wrong" #3). Serialized
     // MEMORY_AND_DISK: mentions spill to disk rather than re-detecting.
     // Callers release it via unpersist/clearCache when the returned triples
     // have been consumed (Verify/Bench clear the cache per query).
-    val mentions = detectMentions(docs, gaz, numPartitions, feats)
+    val mentions = mentionsOf(docs, lexicon.select("surface", "entity_type").as[(String, String)],
+      numPartitions, feats)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // surface-level link resolution (Linker.resolve picks the strategy):
     // the distinct (text, type) set is vocabulary-bounded, so resolving it

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.core.{Doc, Mention}
 import graft.detect.Detector
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -57,14 +56,16 @@ object Streaming {
       .as[Doc]
   }
 
-  /** The same sentence-explode + detector, applied to a stream —
-    * stateless transformations compose identically in streaming plans.
+  /** The same sentence-explode + detector, applied to a stream. The
+    * detector broadcasts the gazetteer whatever its size: its partitioned
+    * strategy aggregates per sentence, which an append-mode stream cannot
+    * run.
     */
   def detectStream(
       docs: Dataset[Doc],
-      gazBc: Broadcast[Detector.Gazetteer],
-      featsBc: Broadcast[graft.detect.Features.FeatureModel] = null): Dataset[Mention] =
-    Detector.detect(graft.pipeline.KgPipeline.sentences(docs), gazBc, featsBc = featsBc)
+      gazetteer: Dataset[(String, String)],
+      feats: Option[graft.detect.Features.FeatureModel] = None): Dataset[Mention] =
+    Detector.detect(graft.pipeline.KgPipeline.sentences(docs), gazetteer, feats = feats)
 
   /** Drain-available-now writer: processes everything currently in the
     * source, checkpoints, and terminates. Incremental by construction.

@@ -34,9 +34,8 @@ class DetectorSpec extends AnyFunSuite {
     val docs = DocsGen.docs(g)
     val gold = DocsGen.goldMentions(g).collect()
       .map(m => (m.doc_id, m.span_idx, m.entity_type, m.text, m.start, m.end)).toSet
-    val gazBc = Detector.broadcastGazetteer(spark, DocsGen.vocabEntries)
     val sents = graft.pipeline.KgPipeline.sentences(docs)
-    val got = Detector.detect(sents, gazBc).collect()
+    val got = Detector.detect(sents, DocsGen.vocabEntries.toDS()).collect()
       .map(m => (m.doc_id, m.span_idx, m.entity_type, m.text, m.start, m.end)).toSet
     assert(got == gold)
     g.unpersist()
@@ -101,9 +100,8 @@ class DetectorSpec extends AnyFunSuite {
     val docs = DocsGen.docs(g)
     val gold = DocsGen.goldMentions(g).collect()
       .map(m => (m.doc_id, m.span_idx, m.entity_type, m.text, m.start, m.end)).toSet
-    val gazBc = Detector.broadcastGazetteer(spark, DocsGen.vocabEntries)
     val sents = graft.pipeline.KgPipeline.sentences(docs)
-    val got = Detector.detect(sents, gazBc, trans = trans).collect()
+    val got = Detector.detect(sents, DocsGen.vocabEntries.toDS(), trans = trans).collect()
       .map(m => (m.doc_id, m.span_idx, m.entity_type, m.text, m.start, m.end)).toSet
     assert(got == gold)
     g.unpersist()

@@ -38,10 +38,9 @@ class FeatureDevEvalSpec extends AnyFunSuite {
 
     val gazEntries = Lexicon.gazetteerEntries(Lexicon.harvest(train))
     val gazSurfaces = gazEntries.map(_._1).toSet
-    val gazBc = Detector.broadcastGazetteer(spark, gazEntries.toSeq)
+    val gaz = gazEntries.toSeq.toDS()
 
     val model = Features.fit(train)
-    val featsBc = spark.sparkContext.broadcast(model)
     val trans = Detector.estimateTransitions(train)
 
     val sents = dev.map(ts => Sentence(ts.doc_id, 0, ts.chars.mkString)).cache()
@@ -55,8 +54,8 @@ class FeatureDevEvalSpec extends AnyFunSuite {
       (m.precision, m.recall, m.f1, m.tp)
     }
 
-    val gazOnly = Detector.detect(sents, gazBc, trans = trans).cache()
-    val full = Detector.detect(sents, gazBc, trans = trans, featsBc = featsBc).cache()
+    val gazOnly = Detector.detect(sents, gaz, trans = trans).cache()
+    val full = Detector.detect(sents, gaz, trans = trans, feats = Some(model)).cache()
 
     val (gp, gr, gf, _) = eval(gazOnly, gold)
     val (fp, fr, ff, _) = eval(full, gold)

@@ -60,11 +60,15 @@ class FunctionsSpec extends AnyFunSuite {
       (3L, Array(7L, 8L), Array(1L, 2L)), // none
       (4L, Array.empty[Long], Array.empty[Long]))
     val dir = java.nio.file.Files.createTempDirectory("sigeq_expr").toString
-    rows.toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
+    // null slots never count as agreeing, whether one or both are null
+    val withNulls = Seq[(Long, Seq[java.lang.Long], Seq[java.lang.Long])](
+      (5L, Seq(1L, null, 3L, null), Seq(1L, null, 4L, 7L))) // 1 equal
+    (rows.map { case (id, a, b) => (id, a.toSeq.map(Long.box), b.toSeq.map(Long.box)) } ++ withNulls)
+      .toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir).orderBy("id")
     val native = df.select(SigEqCount.sig_eq_count(col("a"), col("b")).as("n"))
       .collect().map(_.getLong(0)).toSeq
-    assert(native == Seq(3L, 2L, 0L, 0L))
+    assert(native == Seq(3L, 2L, 0L, 0L, 1L))
     // the replaced formulation, for bit-equality of est_jaccard = n/k
     val legacy = df.select(
       aggregate(
@@ -79,6 +83,9 @@ class FunctionsSpec extends AnyFunSuite {
     assert(nrow.isNullAt(0))
     Registry.registerAll(spark)
     assert(spark.sql("select sig_eq_count(array(1L,2L), array(1L,3L))").head().getLong(0) == 1L)
+    // interpreted over generic arrays (constant-folded): null slots skipped, no NPE
+    assert(spark.sql("select sig_eq_count(array(1L, null, null), array(1L, null, 5L))")
+      .head().getLong(0) == 1L)
   }
 
   test("shingle_hashes one-pass kernel equals shingles().distinct.map(hashString), incl. via codegen") {

@@ -223,6 +223,19 @@ class Round2Spec extends AnyFunSuite {
     assert(a.map(_._1).toSeq == (1 to expected.length).map(i => f"C$i%07d"))
   }
 
+  test("lexicon ids order a null surface and a null type first on the driver and distributed paths") {
+    import spark.implicits._
+    def key(e: LexiconEntry) = (e.concept_id, e.surface, e.entity_type, e.embedding.toSeq)
+    val rows = DocsGen.vocabEntries ++ Seq((null: String) -> "Drug", "阿司匹林X" -> (null: String))
+    val local = Lexicon.fromSurfaces(rows.toDS())
+    assert(graft.ops.BoundedCollect.isLocal(rows.toDS()))
+    val distributed = Lexicon.fromSurfaces(rows.toDS().repartition(2))
+    val a = local.collect().sortBy(_.concept_id).map(key).toSeq
+    assert(a == distributed.collect().sortBy(_.concept_id).map(key).toSeq)
+    assert(a.head._2 == "阿司匹林X" && a.head._3 == null)
+    assert(a.exists(e => e._2 == null && e._3 == "Drug"))
+  }
+
   test("int8-quantized lexicon is 4x smaller and links identically") {
     import spark.implicits._
     val lex = Lexicon.fromSurfaces(DocsGen.vocabEntries.toDS())

@@ -309,8 +309,8 @@ class Round4Spec extends AnyFunSuite {
         java.nio.file.Files.write(tmp,
           texts.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
         val sentences = graft.data.BioCorpus.readRawText(spark, tmp.toString)
-        val gaz = graft.detect.Detector.broadcastGazetteer(spark, graft.data.DocsGen.vocabEntries)
-        val mentions = graft.detect.Detector.detect(sentences, gaz)
+        import spark.implicits._
+        val mentions = graft.detect.Detector.detect(sentences, graft.data.DocsGen.vocabEntries.toDS())
         val (df, column) = fmt match {
           case "json" => (graft.sinks.Formats.jsonRecords(sentences, mentions), "json")
           case "markup" => (graft.sinks.Formats.markupText(sentences, mentions), "marked")

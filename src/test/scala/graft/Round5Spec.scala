@@ -132,10 +132,9 @@ class Round5Spec extends AnyFunSuite {
     val fitted = graft.detect.Features.fit(graft.data.BioCorpus.read(spark, bio.toString))
     graft.detect.Features.save(fitted, spark, modelPath)
     val loaded = graft.detect.Features.load(spark, modelPath)
-    val gazBc = graft.detect.Detector.broadcastGazetteer(spark, graft.data.DocsGen.vocabEntries)
     val got = graft.detect.Detector.detect(
       Seq(graft.core.Sentence("p1", 0, "患者有乙型肝炎病史")).toDS(),
-      gazBc, featsBc = spark.sparkContext.broadcast(loaded))
+      graft.data.DocsGen.vocabEntries.toDS(), feats = Some(loaded))
       .collect().map(m => (m.entity_type, m.text)).toSeq
     assert(got.contains(("Diseases", "乙型肝炎")),
       s"off-gazetteer surface not recovered through the persisted model: $got")

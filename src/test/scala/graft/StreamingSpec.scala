@@ -1,7 +1,6 @@
 package graft
 
 import graft.data.DocsGen
-import graft.detect.Detector
 import graft.streaming.Streaming
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -14,13 +13,13 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = Files.createTempDirectory("docs_stream").toString
     val outDir = Files.createTempDirectory("mentions_out").toString
     val ckpt = Files.createTempDirectory("ckpt").toString
-    val gazBc = Detector.broadcastGazetteer(spark, DocsGen.vocabEntries)
+    val gaz = DocsGen.vocabEntries.toDS()
 
     // batch 1 arrives
     val g1 = DocsGen.gen(spark, 50, seed = 1)
     DocsGen.docs(g1).write.mode("append").parquet(srcDir)
     val q1 = Streaming.availableNowToParquet(
-      Streaming.detectStream(Streaming.docsStream(spark, srcDir), gazBc), outDir, ckpt)
+      Streaming.detectStream(Streaming.docsStream(spark, srcDir), gaz), outDir, ckpt)
     q1.awaitTermination()
     val n1 = spark.read.parquet(outDir).count()
     val expected1 = DocsGen.goldMentions(g1).count()
@@ -31,10 +30,34 @@ class StreamingSpec extends AnyFunSuite {
     DocsGen.docs(g2).map(d => d.copy(doc_id = d.doc_id + "-b2"))
       .write.mode("append").parquet(srcDir)
     val q2 = Streaming.availableNowToParquet(
-      Streaming.detectStream(Streaming.docsStream(spark, srcDir), gazBc), outDir, ckpt)
+      Streaming.detectStream(Streaming.docsStream(spark, srcDir), gaz), outDir, ckpt)
     q2.awaitTermination()
     val n2 = spark.read.parquet(outDir).count()
     assert(n2 == expected1 + DocsGen.goldMentions(g2).count())
+  }
+
+  test("a stream detects against a distributed gazetteer over the detect gate") {
+    import spark.implicits._
+    val srcDir = Files.createTempDirectory("docs_stream_big").toString
+    val outDir = Files.createTempDirectory("mentions_big_out").toString
+    val ckpt = Files.createTempDirectory("ckpt_big").toString
+    val g = DocsGen.gen(spark, 30, seed = 3)
+    DocsGen.docs(g).write.mode("append").parquet(srcDir)
+    // decoys generated on the executors, one row over the gate: a batch
+    // would take the partitioned strategy, which a stream cannot run
+    val decoys = spark.range(graft.detect.Detector.BroadcastCap + 1L)
+      .map(i => LargeGazetteerSpec.decoy(i.toInt))
+    val q = Streaming.availableNowToParquet(
+      Streaming.detectStream(Streaming.docsStream(spark, srcDir), DocsGen.vocabEntries.toDS().union(decoys)),
+      outDir, ckpt)
+    q.awaitTermination()
+    def key(m: graft.core.Mention) = (m.doc_id, m.span_idx, m.entity_type, m.text, m.start, m.end)
+    val got = spark.read.parquet(outDir).as[graft.core.Mention].collect().map(key).sorted.toSeq
+    val expected = graft.detect.Detector.detect(
+      graft.pipeline.KgPipeline.sentences(DocsGen.docs(g)), DocsGen.vocabEntries.toDS())
+      .collect().map(key).sorted.toSeq
+    assert(expected.nonEmpty)
+    assert(got == expected)
   }
 
   test("stateful streaming exact-dedup keeps first doc per text across micro-batches") {
