@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -48,7 +48,9 @@ object Canon {
     *        gating job and any driver collect (ADVICE r2). Duplicate edges
     *        are harmless on both paths.
     * @return DataFrame(node: string, component: string) — component is the
-    *         lexicographically smallest node id in the component.
+    *         lexicographically smallest node id in the component. On the
+    *         contraction path it is a local checkpoint, which
+    *         `GraftSqlBridge.release` frees and `unpersist()` does not.
     */
   def connectedComponents(
       edges: DataFrame,
@@ -177,7 +179,7 @@ object Canon {
         .localCheckpoint(eager = false)
 
       val sum = checksum(small)
-      cur.unpersist()
+      GraftSqlBridge.release(cur)
       cur = small
       converged = sum == prevSum
       prevSum = sum
@@ -193,7 +195,7 @@ object Canon {
       .select(col("node"), coalesce(col("component"), col("node")).as("component"))
       .localCheckpoint() // eager: lets the loop's caches release below
     nodes.unpersist()
-    cur.unpersist()
+    GraftSqlBridge.release(cur)
     result
   }
 }

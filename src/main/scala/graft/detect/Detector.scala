@@ -239,6 +239,28 @@ object Detector {
     * exactly the "codec initialized once per batch" shape of the
     * reference's batch loop, minus the per-sentence array churn that
     * caps single-JVM scaling at high core counts (allocation-rate bound).
+    *
+    * Its output is bit-identical, confidence included, to the O(L²)
+    * reference path ([[detectOne]]: [[emissions]], [[viterbi]],
+    * [[confidences]]), which it beats by two exact shortcuts:
+    *
+    *  - Viterbi by row max. At each position the previous row's max and
+    *    its first argmax are taken once. A target label whose
+    *    predecessors are all L labels, each at a transition of exactly
+    *    +0f (O and the six B-X under [[transitions]]), takes that max and
+    *    argmax directly: its reference candidates are `dp + 0f`, which
+    *    order exactly as `dp` does (x + 0f == x), so the ascending
+    *    first-wins argmax is the row's first argmax and the best score is
+    *    `max + 0f`. Every other label (the I-X labels, and every label of
+    *    an [[estimateTransitions]] matrix) loops over its legal
+    *    predecessors only: an illegal candidate scores dp + (-1e9), about
+    *    1e8 below any legal one (|dp| and |em| are bounded by
+    *    maxLen·max|weight|), so dropping it never changes the argmax, and
+    *    the ascending list keeps the tie order. With the 13-label grammar
+    *    that is 13 + 7 + 6·2 = 32 inner steps per char instead of about
+    *    103.
+    *  - Decode by label id (a precomputed B/I kind and entity type per
+    *    label) instead of parsing label strings per char.
     */
   final class Kernel(
       gaz: Gazetteer,
@@ -246,28 +268,32 @@ object Detector {
       trans: Array[Array[Float]] = transitions,
       feats: Features.FeatureModel = null) {
     private val L = NumLabels
-    private val em = Array.ofDim[Float](maxLen, L)
+    // row-major maxLen × L
+    private val em = new Array[Float](maxLen * L)
+    private val dp = new Array[Float](maxLen * L)
+    private val bp = new Array[Int](maxLen * L)
     private val featScratch = new Array[Double](L)
-    private val dp = Array.ofDim[Float](maxLen, L)
-    private val bp = Array.ofDim[Int](maxLen, L)
     private val path = new Array[Int](maxLen)
     private val conf = new Array[Double](maxLen)
     private val sb = new StringBuilder
-    // Viterbi legal-predecessor lists (r6): for each target label j, the
-    // ascending list of predecessors k the BIO grammar permits
-    // (trans(k)(j) > -1e8). The inner max over the full L is replaced by
-    // a max over this list — with the 13-label grammar that is 2 preds
-    // for the six I- labels instead of 13 (~40% fewer dp ops). EXACT:
-    // every label has >= 1 legal predecessor whose dp is finite (B-/O
-    // are reachable from anywhere), while an illegal candidate scores
-    // dp + (-1e9) — at least ~1e8 below any legal score (|dp| and |em|
-    // are bounded by maxLen·max|weight| << 1e8) — so the restricted
-    // argmax equals the full argmax, including first-wins tie order
-    // (the list preserves ascending k).
+    // a label every predecessor reaches at a transition of exactly +0f
+    // takes the previous row's max (class doc)
+    private val fromRowMax: Array[Boolean] = Array.tabulate(L) { j =>
+      (0 until L).forall(k => java.lang.Float.floatToRawIntBits(trans(k)(j)) == 0)
+    }
+    // every other label: its ascending legal predecessors and their
+    // transitions (all L when none is legal)
     private val legalPred: Array[Array[Int]] = Array.tabulate(L) { j =>
       val ks = (0 until L).filter(k => trans(k)(j) > -1e8f)
       if (ks.isEmpty) (0 until L).toArray else ks.toArray
     }
+    private val legalTrans: Array[Array[Float]] =
+      Array.tabulate(L)(j => legalPred(j).map(k => trans(k)(j)))
+    // decode tables by label id: 'B', 'I' or 'O', and the entity type index
+    private val kindOf: Array[Char] = labelArr.map(_.charAt(0))
+    private val typeOf: Array[Int] =
+      labelArr.map(l => if (l == "O") -1 else Bio.EntityTypes.indexOf(l.substring(2)))
+    private val typeNames: Array[String] = Bio.EntityTypes.toArray
     // bit-identical exp memo: the emission patterns when feats == null
     // take a handful of distinct values per corpus ({0, 2, 8} stamps),
     // so softmax recomputes exp() of the same float arguments millions
@@ -295,30 +321,27 @@ object Detector {
       * re-allocating the maxLen×L matrices each time.
       */
     def detectWith(s: Sentence, g: Gazetteer): Seq[Mention] = {
-      val t = g.trie
+      val trie = g.trie
       val text = s.text
       val n = math.min(text.length, maxLen)
       if (n == 0) return Nil
 
       // emissions (K2): O prior + greedy longest trie matches
+      java.util.Arrays.fill(em, 0, n * L, 0f)
       var i = 0
-      while (i < n) {
-        java.util.Arrays.fill(em(i), 0f)
-        em(i)(oId) = 2.0f
-        i += 1
-      }
+      while (i < n) { em(i * L + oId) = 2.0f; i += 1 }
       i = 0
       while (i < n) {
         // bound the trie scan by g.maxLen so this kernel and the
         // map-probe kernel (emissions()) agree on surfaces longer than the
         // gazetteer cap (they must stay interchangeable)
-        val packed = t.longestMatch(text, i, math.min(i + g.maxLen, n))
+        val packed = trie.longestMatch(text, i, math.min(i + g.maxLen, n))
         if (packed != 0L) {
           val m = (packed >>> 32).toInt
           val t = (packed & 0xFFFFFFFFL).toInt
-          em(i)(bIdByIdx(t)) = 8.0f
+          em(i * L + bIdByIdx(t)) = 8.0f
           var k = 1
-          while (k < m) { em(i + k)(iIdByIdx(t)) = 8.0f; k += 1 }
+          while (k < m) { em((i + k) * L + iIdByIdx(t)) = 8.0f; k += 1 }
           i += m
         } else i += 1
       }
@@ -327,90 +350,104 @@ object Detector {
       // calibration against the gazetteer stamps)
       if (feats != null) {
         i = 0
-        while (i < n) { feats.addScores(text, i, n, em(i), featScratch); i += 1 }
+        while (i < n) { feats.addScores(text, i, n, em, featScratch, i * L); i += 1 }
       }
 
-      // Viterbi (K4) into reusable dp/bp
+      // Viterbi (K4) into reusable dp/bp, by row max (class doc)
       var j = 0
-      while (j < L) { dp(0)(j) = trans(L)(j) + em(0)(j); j += 1 }
+      while (j < L) { dp(j) = trans(L)(j) + em(j); j += 1 }
       i = 1
       while (i < n) {
+        val prev = (i - 1) * L
+        val row = i * L
+        var mx = Float.NegativeInfinity
+        var amx = 0
+        j = 0
+        while (j < L) { if (dp(prev + j) > mx) { mx = dp(prev + j); amx = j }; j += 1 }
+        val mx0 = mx + 0f
         j = 0
         while (j < L) {
-          val preds = legalPred(j)
-          var best = Float.NegativeInfinity
-          var arg = 0
-          var p = 0
-          while (p < preds.length) {
-            val k = preds(p)
-            val sc = dp(i - 1)(k) + trans(k)(j)
-            if (sc > best) { best = sc; arg = k }
-            p += 1
+          if (fromRowMax(j)) {
+            dp(row + j) = mx0 + em(row + j)
+            bp(row + j) = amx
+          } else {
+            val preds = legalPred(j)
+            val pt = legalTrans(j)
+            var best = Float.NegativeInfinity
+            var arg = 0
+            var p = 0
+            while (p < preds.length) {
+              val sc = dp(prev + preds(p)) + pt(p)
+              if (sc > best) { best = sc; arg = preds(p) }
+              p += 1
+            }
+            dp(row + j) = best + em(row + j)
+            bp(row + j) = arg
           }
-          dp(i)(j) = best + em(i)(j)
-          bp(i)(j) = arg
           j += 1
         }
         i += 1
       }
+      val last = (n - 1) * L
       var best = Float.NegativeInfinity
       var arg = 0
       j = 0
-      while (j < L) { if (dp(n - 1)(j) > best) { best = dp(n - 1)(j); arg = j }; j += 1 }
+      while (j < L) { if (dp(last + j) > best) { best = dp(last + j); arg = j }; j += 1 }
       path(n - 1) = arg
       i = n - 1
-      while (i > 0) { path(i - 1) = bp(i)(path(i)); i -= 1 }
+      while (i > 0) { path(i - 1) = bp(i * L + path(i)); i -= 1 }
 
       // per-position confidence (P7): softmax(emission)[chosen] — exp via
       // the bit-identical memo (same float argument -> same double)
       i = 0
       while (i < n) {
+        val row = i * L
         var mx = Float.NegativeInfinity
         j = 0
-        while (j < L) { if (em(i)(j) > mx) mx = em(i)(j); j += 1 }
+        while (j < L) { if (em(row + j) > mx) mx = em(row + j); j += 1 }
         var z = 0.0
         j = 0
-        while (j < L) { z += expCached(em(i)(j) - mx); j += 1 }
-        conf(i) = expCached(em(i)(path(i)) - mx) / z
+        while (j < L) { z += expCached(em(row + j) - mx); j += 1 }
+        conf(i) = expCached(em(row + path(i)) - mx) / z
         i += 1
       }
 
       // BIO decode (C1) — reference state machine over single-char tokens
       // (every token is one char here: offsets == indices, no specials)
       val out = scala.collection.mutable.ArrayBuffer.empty[Mention]
-      var curType: String = null
+      var curType = -1
       var curStart = 0
       var curEnd = 0
       def flush(): Unit = {
-        if (curType != null) {
+        if (curType >= 0) {
           var csum = 0.0
           var k = curStart
           while (k < curEnd) { csum += conf(k); k += 1 }
           out += Mention(
-            s.doc_id, s.span_idx, curType,
+            s.doc_id, s.span_idx, typeNames(curType),
             Bio.cleanEntityName(sb.toString), curStart, curEnd,
             if (curEnd > curStart) csum / (curEnd - curStart) else 1.0)
-          curType = null
+          curType = -1
           sb.clear()
         }
       }
       i = 0
       while (i < n) {
-        val label = labelArr(path(i))
-        if (label.charAt(0) == 'B') {
-          flush()
-          curType = label.substring(2)
-          sb.clear(); sb.append(text.charAt(i))
-          curStart = i
-          curEnd = i + 1
-        } else if (label.charAt(0) == 'I') {
-          if (curType != null && label.regionMatches(2, curType, 0, curType.length)
-            && label.length - 2 == curType.length) {
-            sb.append(text.charAt(i))
+        val id = path(i)
+        kindOf(id) match {
+          case 'B' =>
+            flush()
+            curType = typeOf(id)
+            sb.clear(); sb.append(text.charAt(i))
+            curStart = i
             curEnd = i + 1
-          }
-        } else { // O
-          flush()
+          case 'I' =>
+            // extends only an open entity of its own type
+            if (curType >= 0 && typeOf(id) == curType) {
+              sb.append(text.charAt(i))
+              curEnd = i + 1
+            }
+          case _ => flush() // O
         }
         i += 1
       }
@@ -547,12 +584,31 @@ object Detector {
     if (chars.isEmpty) Nil else decode(s.doc_id, s.span_idx, chars, emissions(chars, gaz))
   }
 
+  /** [[detectOne]] with transitions and a feature model: the O(L²)
+    * reference for [[Kernel]] (it adds the model's scores to
+    * [[emissions]] as the kernel does, then runs [[viterbi]] and
+    * [[confidences]]).
+    */
+  private[graft] def detectReference(
+      s: Sentence, gaz: Gazetteer, maxLen: Int,
+      trans: Array[Array[Float]], feats: Features.FeatureModel): Seq[Mention] = {
+    val chars = tokenize(s.text, maxLen)
+    if (chars.isEmpty) return Nil
+    val em = emissions(chars, gaz)
+    if (feats != null) {
+      val scratch = new Array[Double](NumLabels)
+      em.indices.foreach(i => feats.addScores(s.text, i, chars.length, em(i), scratch))
+    }
+    decode(s.doc_id, s.span_idx, chars, em, trans)
+  }
+
   /** Viterbi over `em`, then BIO decode to mentions carrying their mean
     * per-position confidence (K4→C1).
     */
   private def decode(
-      docId: String, spanIdx: Int, chars: Array[String], em: Array[Array[Float]]): Seq[Mention] = {
-    val path = viterbi(em)
+      docId: String, spanIdx: Int, chars: Array[String], em: Array[Array[Float]],
+      trans: Array[Array[Float]] = transitions): Seq[Mention] = {
+    val path = viterbi(em, trans)
     val conf = confidences(em, path)
     Bio.decodeBio(
       chars.toIndexedSeq,

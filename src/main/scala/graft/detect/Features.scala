@@ -82,11 +82,12 @@ object Features {
       unseen: Array[Float] = Array.empty) extends Serializable {
 
     /** Add this model's per-label scores for position `i` of `text`
-      * (truncated length `n`) into `out`. `scratch` is a caller-owned
-      * `Array[Double](numLabels)` so the model stays immutable and
-      * thread-safe under broadcast sharing.
+      * (truncated length `n`) into `out(off until off + numLabels)`.
+      * `scratch` is a caller-owned `Array[Double](numLabels)` so the model
+      * stays immutable and thread-safe under broadcast sharing.
       */
-    def addScores(text: String, i: Int, n: Int, out: Array[Float], scratch: Array[Double]): Unit = {
+    def addScores(
+        text: String, i: Int, n: Int, out: Array[Float], scratch: Array[Double], off: Int = 0): Unit = {
       var y = 0
       while (y < L) { scratch(y) = priors(y).toDouble; y += 1 }
       def add(from: Int, until: Int, t: Int): Unit = {
@@ -112,7 +113,7 @@ object Features {
       val lse = mx + math.log(z)
       y = 0
       while (y < L) {
-        out(y) += scale * (scratch(y) - lse).toFloat
+        out(off + y) += scale * (scratch(y) - lse).toFloat
         y += 1
       }
     }

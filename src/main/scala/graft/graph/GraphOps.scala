@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Light graph analytics over the materialized KG — the first queries a
@@ -82,12 +82,14 @@ object GraphOps {
       // iteration tower to the final action and the optimizer would
       // analyze an O(iters)-deep join plan. Eager = one bounded job per
       // round and a constant-depth plan, the iterative-DataFrame norm.
-      ranks = nodes
+      val next = nodes
         .join(contribs.groupBy("node").agg(sum(col("c")).as("s")), Seq("node"), "left")
         .select(
           col("node"),
           (lit((1.0 - damping) / n) + lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
         .localCheckpoint()
+      GraftSqlBridge.release(ranks) // the previous round's checkpoint
+      ranks = next
       iter += 1
     }
     // the last round's eager checkpoint already cut every reference to
@@ -187,11 +189,13 @@ object GraphOps {
       // rename before the cnt⋈agg(cnt) self-join so attributes resolve
       val mx = cnt.groupBy("node").agg(max(col("c")).as("mc"))
         .select(col("node").as("mx_node"), col("mc"))
-      labels = cnt
+      val next = cnt
         .join(mx, col("node") === col("mx_node") && col("c") === col("mc"))
         .groupBy("node")
         .agg(min(col("label")).as("label"))
         .localCheckpoint()
+      GraftSqlBridge.release(labels)
+      labels = next
       i += 1
     }
     bi.unpersist()
@@ -267,19 +271,24 @@ object GraphOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     bi.count()
     var visited = seeds.toDF("node").withColumn("hops", lit(0)).localCheckpoint()
-    var frontier = visited.select("node")
+    // the checkpoint of the last hop's nodes (the seeds at first)
+    var frontier = visited
     var i = 1
     while (i <= k && !frontier.isEmpty) {
       val next = bi
-        .join(broadcast(frontier.withColumnRenamed("node", "src")), Seq("src"))
+        .join(broadcast(frontier.select(col("node").as("src"))), Seq("src"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
         .withColumn("hops", lit(i))
         .localCheckpoint()
-      visited = visited.unionByName(next).localCheckpoint()
-      frontier = next.select("node")
+      val grown = visited.unionByName(next).localCheckpoint()
+      if (frontier ne visited) GraftSqlBridge.release(frontier)
+      GraftSqlBridge.release(visited)
+      visited = grown
+      frontier = next
       i += 1
     }
+    if (frontier ne visited) GraftSqlBridge.release(frontier)
     bi.unpersist()
     visited
   }
@@ -393,9 +402,11 @@ object GraphOps {
       val relaxed = e
         .join(dist.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
+      val next = dist.unionByName(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
         .localCheckpoint()
+      GraftSqlBridge.release(dist)
+      dist = next
       i += 1
     }
     e.unpersist()
@@ -428,11 +439,13 @@ object GraphOps {
     while (i < rounds) {
       val keep = bi.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("src")
-      bi = bi
+      val next = bi
         .join(keep, "src")
         .join(keep.withColumnRenamed("src", "dst"), "dst")
         .select("src", "dst")
         .localCheckpoint()
+      GraftSqlBridge.release(bi)
+      bi = next
       i += 1
     }
     bi.groupBy("src").agg(count(lit(1)).as("degree"))

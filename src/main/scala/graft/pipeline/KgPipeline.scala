@@ -5,7 +5,7 @@ import graft.canon.Canon
 import graft.core._
 import graft.detect.Detector
 import graft.link.Linker
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction pipeline (north_star):
@@ -88,41 +88,62 @@ object KgPipeline {
 
   /** Full pipeline: docs + lexicon → canonicalized triples. Internal
     * persists (mentions, resolution, components) stay alive for the
-    * returned lazy Dataset; long-lived sessions that run many pipelines
-    * should use [[runWithCleanup]] or `spark.catalog.clearCache()`.
+    * returned lazy Dataset. The mention table is a columnar cache entry
+    * here, which `spark.catalog.clearCache()` frees; long-lived sessions
+    * that run many pipelines should use [[runWithCleanup]] or
+    * `spark.catalog.clearCache()`.
     */
   def run(
       docs: Dataset[Doc],
       lexicon: Dataset[LexiconEntry],
       numPartitions: Int = 0,
       feats: Option[graft.detect.Features.FeatureModel] = None): Dataset[Triple] =
-    runWithCleanup(docs, lexicon, numPartitions, feats)._1
+    pipeline(docs, lexicon, numPartitions, feats, withCleanup = false)._1
 
-  /** [[run]] plus a cleanup thunk that unpersists the pipeline's internal
-    * caches — call it once the returned triples have been materialized
-    * (counted/written).
+  /** [[run]] plus a cleanup thunk that frees the pipeline's internal
+    * state — call it once the returned triples have been materialized
+    * (counted/written). The mention table is kept as persisted rows, not
+    * as a cache entry: `spark.catalog.clearCache()` does not free it, the
+    * thunk does.
     */
   def runWithCleanup(
       docs: Dataset[Doc],
       lexicon: Dataset[LexiconEntry],
       numPartitions: Int = 0,
-      feats: Option[graft.detect.Features.FeatureModel] = None): (Dataset[Triple], () => Unit) = {
+      feats: Option[graft.detect.Features.FeatureModel] = None): (Dataset[Triple], () => Unit) =
+    pipeline(docs, lexicon, numPartitions, feats, withCleanup = true)
+
+  private def pipeline(
+      docs: Dataset[Doc],
+      lexicon: Dataset[LexiconEntry],
+      numPartitions: Int,
+      feats: Option[graft.detect.Features.FeatureModel],
+      withCleanup: Boolean): (Dataset[Triple], () => Unit) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // the detector is the CPU-dominant stage: persist its output so the
-    // surfaces-distinct job (materialized below) and the main linked-join
-    // job run it ONCE, not twice (r1 VERDICT "What's wrong" #3). Serialized
-    // MEMORY_AND_DISK: mentions spill to disk rather than re-detecting.
-    // Callers release it via unpersist/clearCache when the returned triples
-    // have been consumed (Verify/Bench clear the cache per query).
-    val mentions = mentionsOf(docs, lexicon.select("surface", "entity_type").as[(String, String)],
+    // the detector is the CPU-dominant stage: its output is persisted so
+    // the resolve gate's job (which computes it) and the main query run
+    // it ONCE, not twice (r1 VERDICT "What's wrong" #3), MEMORY_AND_DISK
+    // (spilling to disk rather than re-detecting). With a cleanup thunk
+    // to free them, the rows are kept as the plan's own rows,
+    // deserialized: a columnar cache spent about 15% of the detect
+    // stage's CPU on compression statistics for a table read back once,
+    // in exchange for about 8x fewer bytes held. Without one (`run`) the
+    // table is a serialized columnar cache entry, so that `clearCache`
+    // frees it, as Verify and Bench do between queries.
+    val detected = mentionsOf(docs, lexicon.select("surface", "entity_type").as[(String, String)],
       numPartitions, feats)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val mentions =
+      if (withCleanup) {
+        val rows = detected.queryExecution.toRdd.map(_.copy())
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        GraftSqlBridge.ofInternalRows(spark, rows, detected.schema).as[Mention]
+      } else detected.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // surface-level link resolution (Linker.resolve picks the strategy):
     // the distinct (text, type) set is vocabulary-bounded, so resolving it
     // once and broadcasting the result back avoids any wide shuffle of
     // the mention table. The resolve gate's job also materializes the
-    // mentions cache, which an eager count() would pay anyway.
+    // persisted mentions, which an eager count() would pay anyway.
     val resolution = Linker.resolve(mentions.select(col("text"), col("entity_type")).distinct(), lexicon)
     val linked = mentions
       .join(broadcast(resolution), Seq("text", "entity_type"), "inner")
@@ -138,12 +159,7 @@ object KgPipeline {
       .select(concat(lit("S:"), col("text")).as("src"), col("concept_id").as("dst"))
     val components = Canon.connectedComponents(edges)
     val triples = Triples.assemble(linked)
-    val cleanup = () => {
-      mentions.unpersist()
-      resolution.unpersist()
-      components.unpersist() // final localCheckpoint of the CC loop
-      ()
-    }
+    val cleanup = () => Seq(mentions, resolution, components).foreach(GraftSqlBridge.release(_))
     (Triples.canonicalize(triples, components), cleanup)
   }
 }

@@ -23,6 +23,33 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over rows a plan has already produced, as internal rows
+    * of `schema` — how an RDD persisted from `queryExecution.toRdd` is read
+    * back (`internalCreateDataFrame` is `private[sql]`).
+    */
+  def ofInternalRows(
+      spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** Frees what `ds` holds: its cache entry, and the persisted RDD it
+    * reads when its plan is a bare RDD scan — a local checkpoint or rows
+    * read back through [[ofInternalRows]]. `Dataset.unpersist()` alone
+    * frees nothing of those: their blocks hang off the plan's RDD, which
+    * the cache manager never saw.
+    */
+  def release(ds: Dataset[_], blocking: Boolean = false): Unit = {
+    ds.unpersist(blocking)
+    ds.queryExecution.logical match {
+      // through the context: `RDD.unpersist` would log a WARN per local
+      // checkpoint that its lineage cannot be recomputed, which is what a
+      // caller done with it wants
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking)
+      case _ =>
+    }
+  }
+
   /** The analyzed logical plan of a DataFrame (for building custom
     * operator nodes over existing frames).
     */

@@ -2,7 +2,7 @@ package graft
 
 import graft.core._
 import graft.data.DocsGen
-import graft.detect.Detector
+import graft.detect.{Detector, Features}
 import org.scalatest.funsuite.AnyFunSuite
 
 class DetectorSpec extends AnyFunSuite {
@@ -114,5 +114,51 @@ class DetectorSpec extends AnyFunSuite {
     assert(Detector.detectOne(long, gaz, 128).isEmpty)
     val inside = Sentence("d", 0, "在" * 10 + "胃癌")
     assert(Detector.detectOne(inside, gaz, 128).map(m => (m.start, m.end)) == Seq((10, 12)))
+  }
+
+  test("the batched Kernel equals the O(L²) reference exactly, confidence included, " +
+    "under estimated transitions, feature models and hostile text") {
+    val g = DocsGen.gen(spark, 40, seed = 31).cache()
+    val gold = DocsGen.goldSentences(g).collect().toSeq
+    val estimated = Detector.estimateTransitions(DocsGen.goldSentences(g))
+    g.unpersist()
+    val L = Detector.NumLabels
+    val fitted = Features.fitLocal(gold.map(ts => (ts.chars, ts.tags)), dim = 1024)
+    // one bucket, no weights, O far below: every other label ties at the
+    // row max on every row
+    val tied = Features.FeatureModel(
+      1, new Array[Float](L), Array.tabulate(L)(j => if (j == Bio.OId) -1000f else 0f), 1f)
+    val ext = "\uD840\uDC00" // U+20000, a surrogate pair
+    val atCap = "肝" * 32
+    val gaz = Detector.Gazetteer(DocsGen.vocabEntries ++ Seq(
+      "肺" -> "Anatomical", "肺炎" -> "Diseases", atCap -> "Anatomical", ("肝" * 33) -> "Drug",
+      (ext + "癌") -> "Diseases", ("胃" + ext) -> "Anatomical", "" -> "Drug"))
+    assert(gaz.maxLen == 32)
+    val hostile = Seq(
+      "",
+      "在" * 127 + "肺炎", // the cut at 128 falls inside the surface
+      "在" * 126 + "肺炎" + "在" * 10,
+      "在" * 200 + "肺炎",
+      ext + "癌" + ext + "肺炎" + ext,
+      "胃" + ext + "癌",
+      "\uD840肺炎\uDC00", // lone surrogates
+      "肺炎肺肺炎炎肺",
+      atCap + "肺炎",
+      "肝" * 33 + "肺",
+      "肝" * 31 + "肺炎") ++ gold.map(_.chars.mkString)
+    val sentences = hostile.zipWithIndex.map { case (t, i) => Sentence(s"d$i", 0, t) }
+    // confidence by its bits, so a NaN compares equal to itself
+    def bits(ms: Seq[Mention]) = ms.map(m => m.copy(confidence = 0.0) -> java.lang.Double.doubleToRawLongBits(m.confidence))
+    for {
+      (tName, trans) <- Seq("static" -> Detector.transitions, "estimated" -> estimated)
+      (fName, feats) <- Seq("none" -> null, "fitted" -> fitted, "tied" -> tied)
+    } {
+      val kernel = new Detector.Kernel(gaz, 128, trans, feats)
+      sentences.foreach { s =>
+        val want = Detector.detectReference(s, gaz, 128, trans, feats)
+        val got = kernel.detect(s)
+        assert(bits(got) == bits(want), s"$tName/$fName on '${s.text}': kernel $got, reference $want")
+      }
+    }
   }
 }

@@ -7,7 +7,7 @@ import graft.data.{DocsGen, Lexicon}
 import graft.link.Linker
 import graft.metrics.SpanMetrics
 import graft.pipeline.KgPipeline
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, GraftSqlBridge}
 import org.scalatest.funsuite.AnyFunSuite
 
 class PipelineSpec extends AnyFunSuite {
@@ -217,5 +217,53 @@ class PipelineSpec extends AnyFunSuite {
     assert(micro.tp == 1 && micro.pred_count == 3 && micro.gold_count == 3)
     assert(math.abs(micro.precision - 1.0 / 3) < 1e-9)
     assert(math.abs(micro.recall - 1.0 / 3) < 1e-9)
+  }
+
+  test("runWithCleanup's cleanup frees every RDD the run persisted, driver-local and parquet lexicon") {
+    val sc = spark.sparkContext
+    val g = DocsGen.gen(spark, 100, seed = 29).cache()
+    g.count()
+    val docs = DocsGen.docs(g)
+    val lex = lexiconFromVocab()
+    Seq("driver-local" -> lex, "parquet" -> parquetLexicon(lex)).foreach { case (what, l) =>
+      val before = sc.getPersistentRDDs.keySet
+      val (triples, cleanup) = KgPipeline.runWithCleanup(docs, l)
+      assert(triples.count() > 0)
+      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, s"$what: no mention rows persisted")
+      cleanup()
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(left.isEmpty, s"$what: cleanup left $left")
+    }
+    g.unpersist()
+  }
+
+  test("clearCache frees every RDD run persisted, driver-local and parquet lexicon") {
+    val sc = spark.sparkContext
+    val g = DocsGen.gen(spark, 100, seed = 29).cache()
+    g.count()
+    val docs = DocsGen.docs(g)
+    val lex = lexiconFromVocab()
+    Seq("driver-local" -> lex, "parquet" -> parquetLexicon(lex)).foreach { case (what, l) =>
+      val before = sc.getPersistentRDDs.keySet
+      assert(KgPipeline.run(docs, l).count() > 0)
+      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, s"$what: no mentions persisted")
+      spark.catalog.clearCache()
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(left.isEmpty, s"$what: clearCache left $left")
+    }
+  }
+
+  test("release frees every RDD the contraction loop of connectedComponents left persisted") {
+    val spark2 = spark
+    import spark2.implicits._
+    val sc = spark.sparkContext
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "f", "d" -> "e").toDF("src", "dst")
+    val before = sc.getPersistentRDDs.keySet
+    val cc = Canon.connectedComponents(edges, driverMaxEdges = 0)
+    assert(cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a", "f" -> "a", "d" -> "d", "e" -> "d"))
+    GraftSqlBridge.release(cc)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"left persisted: $left")
   }
 }

@@ -21,6 +21,10 @@ class ToolsSpec extends AnyFunSuite {
       assert(jobs >= 1 && stages >= jobs && tasks >= stages, s"$name: $q")
       val stageTasks = q.get("stage_tasks").get(0)
       assert(stageTasks.size == stages && stageTasks.elements.asScala.map(_.asInt).sum == tasks)
+      Seq("persist_mb", "held_mb").foreach { key =>
+        val mb = q.get(key)
+        assert(mb != null && mb.size == 1 && mb.get(0).asDouble >= 0.0, s"$name $key: $q")
+      }
       stageTasks.fieldNames.asScala.toSet
     }
     assert(stageIds(0).intersect(stageIds(1)).isEmpty, s"shared stage ids: $line")
