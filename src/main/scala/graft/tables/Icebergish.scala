@@ -2,9 +2,9 @@ package graft.tables
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -26,19 +26,18 @@ final class ConcurrentCommitException(msg: String, cause: Throwable)
   *   <root>/data/snap-<id>-<nonce>/...parquet   immutable data files per commit
   *   <root>/manifests/snap-<id>.json            snapshot manifest:
   *       {snapshot, parent, mode, data_dir, files[], rows, tags{}, schema, ...}
-  *   <root>/current                             pointer file (atomic rename)
+  *   <root>/locks/snap-<id>                     exclusive claim of a snapshot id
   * }}}
   *
   * Guarantees:
   *  - snapshot isolation: readers resolve the current snapshot once, then
   *    read only the immutable file set of that snapshot's manifest chain;
-  *  - a COMPLETE MANIFEST IMPLIES VISIBILITY: the manifest is the last
-  *    artifact written before the pointer flip, so [[currentSnapshotId]]
-  *    resolves to max(pointer, max manifest id). A crash in the
-  *    manifest→pointer window leaves no orphan: the next reader/writer
-  *    adopts the completed manifest and the next commit builds on top of
-  *    it (previously such a crash made every later commit collide on the
-  *    orphaned id — permanently bricking the table).
+  *  - a COMPLETE MANIFEST IS VISIBILITY: the manifest is the last artifact
+  *    a commit writes, and [[currentSnapshotId]] is the max manifest id in
+  *    `manifests/`. There is no pointer file to flip, so no crash window
+  *    between commit and visibility. (Tables written before the pointer
+  *    was dropped may still hold a `current` file; it is ignored — it
+  *    could never exceed the max manifest id, which always decided.)
   *  - optimistic concurrency: each writer stages data under a UNIQUE
   *    nonce'd directory, atomically claims the snapshot id (`locks/`,
   *    mkdir-exclusive), writes the manifest to a dot-prefixed temp name
@@ -94,7 +93,8 @@ object Icebergish {
       dataDir: Option[String] = None, // nonce'd; pre-r3 manifests lack it
       tags: Option[Map[String, Long]] = None, // rolled-up tag → rows
       removedFiles: Seq[String] = Nil, // "replace" mode: files dropped from the parent's effective set
-      fileStats: Map[String, Map[String, ColStats]] = Map.empty) // relpath → col → bounds
+      fileStats: Map[String, Map[String, ColStats]] = Map.empty, // relpath → col → bounds
+      schema: Option[StructType] = None) // the committed frame's; None = read with inference
 
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -176,42 +176,25 @@ object Icebergish {
     installed
   }
 
-  private def maxManifestId(f: FileSystem, root: String): Option[Long] = {
-    val mDir = new Path(root, "manifests")
-    if (!f.exists(mDir)) None
-    else {
-      val ids = f.listStatus(mDir).toSeq
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("snap-") && n.endsWith(".json") =>
-          n.stripPrefix("snap-").stripSuffix(".json").toLong
-        }
-      if (ids.isEmpty) None else Some(ids.max)
-    }
-  }
-
-  /** Current snapshot = max(pointer, max manifest id). A fully-written
-    * manifest implies complete data (it is written after the data files),
-    * so a crash between manifest write and pointer flip must RESOLVE to
-    * the manifest, not hide it: the old pointer-only rule left such
-    * commits orphaned, and the next commit would collide on their id and
-    * fail forever (ADVICE r2, high).
+  /** Current snapshot = the max manifest id. A listed manifest is complete
+    * (it is installed atomically, after the data files), and no manifest
+    * is ever deleted, so the max id only grows; one listing of
+    * `manifests/` resolves it. A `current` file left by an older version
+    * of this layer is not read: it was written after its manifest, so it
+    * never exceeded this max.
     */
-  def currentSnapshotId(spark: SparkSession, root: String): Option[Long] = {
-    val f = fs(spark, root)
-    val p = new Path(root, "current")
-    // the pointer is advisory: a torn read (concurrent flip mid-swap on a
-    // checksummed local FS — data and .crc replaced non-atomically) or
-    // garbled content must never fail a reader; the manifest listing is
-    // the ground truth the max-rule falls back on
-    val fromPointer = scala.util.Try {
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toLong)
-        finally in.close()
+  def currentSnapshotId(spark: SparkSession, root: String): Option[Long] =
+    manifestIds(fs(spark, root), root).maxOption
+
+  /** Ids of the installed manifests (`snap-<id>.json`; temps are dot-prefixed). */
+  private def manifestIds(f: FileSystem, root: String): Seq[Long] = {
+    val mDir = new Path(root, "manifests")
+    if (!f.exists(mDir)) Nil
+    else f.listStatus(mDir).toSeq
+      .map(_.getPath.getName)
+      .collect { case n if n.startsWith("snap-") && n.endsWith(".json") =>
+        n.stripPrefix("snap-").stripSuffix(".json").toLong
       }
-    }.toOption.flatten
-    (fromPointer.toSeq ++ maxManifestId(f, root).toSeq).maxOption
   }
 
   def readManifest(spark: SparkSession, root: String, id: Long): Snapshot = {
@@ -245,7 +228,8 @@ object Icebergish {
             c -> ColStats(sm.get("t").toString, Option(sm.get("min")), Option(sm.get("max")))
           }.toMap
         }.toMap)
-        .getOrElse(Map.empty))
+        .getOrElse(Map.empty),
+      Option(m.get("schema")).map(j => DataType.fromJson(j.toString).asInstanceOf[StructType]))
   }
 
   /** Manifest chain contributing to snapshot `id`, oldest first — cut at
@@ -294,6 +278,9 @@ object Icebergish {
     * becomes transactional with the commit itself — writers that track
     * progress in a separate file have a crash window between the data
     * commit and the progress write; [[committedTags]] closes it.
+    *
+    * The manifest's `rows` is the write's own output-row count: a commit
+    * reads its files back only to gather `statsColumns` bounds.
     *
     * Concurrency: data stages under a unique nonce'd directory; the
     * manifest create (overwrite=false, atomic on HDFS/posix) is the
@@ -347,9 +334,9 @@ object Icebergish {
     val dataDirRel = s"data/snap-$id-$nonce"
     val dataDir = new Path(root, dataDirRel)
 
-    val writer = df.write.mode("errorifexists")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dataDir.toString)
+    // the row count comes from the write itself (its numOutputRows), so
+    // the commit never reads back the files it has just written
+    val rows = GraftSqlBridge.writeParquet(df, dataDir.toString, partitionBy)
 
     // recursive listing: partitioned layouts nest files under key=value dirs
     val rootQ = f.makeQualified(new Path(root)).toString
@@ -359,24 +346,28 @@ object Icebergish {
     // in the two renderings — spaces, %, non-ASCII roots — keying stats
     // by Path.toString landed them under a name pruneFiles never queried,
     // silently losing zone-map skipping for those files).
+    //
+    // listStatus, not listFiles(dataDir, true): listFiles builds a
+    // LocatedFileStatus per file, which loads the file's permission — on
+    // a local filesystem without the native Hadoop library, one shell
+    // command per file.
     val committedDecoded = {
       val buf = mutable.ArrayBuffer.empty[(String, String)]
-      val it = f.listFiles(dataDir, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
+      def walk(dir: Path): Unit = f.listStatus(dir).foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet"))
           buf += ((st.getPath.toString.stripPrefix(rootQ + "/"), st.getPath.toUri.getPath))
       }
+      walk(dataDir)
       buf.sortBy(_._1).toSeq
     }
     val committed = committedDecoded.map(_._1)
     val decodedToRel: Map[String, String] =
       committedDecoded.map { case (rel, dec) => dec -> rel }.toMap
-    // One read of the committed files yields BOTH the row count and (when
-    // requested) the per-file column bounds — stats collection costs no
-    // extra scan over the count the commit already paid. Only integral /
-    // floating / decimal / string columns are supported; others are
-    // silently skipped (pruning for them simply never fires).
+    // Per-file column bounds, when requested, cost one read of the
+    // committed files. Only integral / floating / decimal / string columns
+    // are supported; others are silently skipped (pruning for them simply
+    // never fires).
     val statTyped: Seq[(String, String)] =
       statsColumns.flatMap { c =>
         df.schema.fields.find(_.name == c).map(_.dataType).collect {
@@ -387,51 +378,47 @@ object Icebergish {
           case _: org.apache.spark.sql.types.StringType => c -> "s"
         }
       }
-    val (rows, fileStats: Map[String, Map[String, ColStats]]) =
-      if (committed.isEmpty) (0L, Map.empty[String, Map[String, ColStats]])
+    val fileStats: Map[String, Map[String, ColStats]] =
+      if (committed.isEmpty || statTyped.isEmpty) Map.empty
       else {
         val paths = committed.map(p => s"$root/$p")
         val reader =
           if (partitionBy.nonEmpty)
             spark.read.option("basePath", f.makeQualified(dataDir).toString)
           else spark.read
-        val base = reader.parquet(paths: _*)
-        if (statTyped.isEmpty) (base.count(), Map.empty[String, Map[String, ColStats]])
-        else {
-          import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-          val aggs = count(lit(1)).as("__n") +:
-            statTyped.flatMap { case (c, _) =>
-              Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))
-            }
-          // per-file aggregate: bounded by the commit's file count
-          val perFile = base.groupBy(input_file_name().as("__file"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect()
-          def norm(t: String, v: Any): Option[Any] = Option(v).map {
-            case n: java.lang.Number if t == "i" => java.lang.Long.valueOf(n.longValue())
-            case n: java.lang.Number if t == "f" => java.lang.Double.valueOf(n.doubleValue())
-            case d: java.math.BigDecimal => d.toPlainString
-            case d: scala.math.BigDecimal => d.bigDecimal.toPlainString
-            case s => s.toString
-          }
-          val stats = perFile.map { r =>
-            // match to the committed listing through the URI-DECODED path
-            // (input_file_name() returns a URI-encoded string, the
-            // listing holds raw characters — decoding both is the one
-            // rendering they must agree on); fall back to the legacy
-            // Path.toString keying if the string is not a parsable URI
-            // (conservative: worst case the file is kept, never skipped)
-            val raw = r.getAs[String]("__file")
-            val rel = (try Option(new java.net.URI(raw).getPath)
-            catch { case _: Exception => None })
-              .flatMap(decodedToRel.get)
-              .getOrElse(new Path(raw).toString.stripPrefix(rootQ + "/"))
-            rel -> statTyped.map { case (c, t) =>
-              c -> ColStats(t, norm(t, r.getAs[Any](s"__min_$c")), norm(t, r.getAs[Any](s"__max_$c")))
-            }.toMap
-          }.toMap
-          (perFile.map(_.getAs[Long]("__n")).sum, stats)
+        // the frame's own schema: no footer-inference job
+        val base = reader.schema(df.schema).parquet(paths: _*)
+        import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+        val aggs = statTyped.flatMap { case (c, _) =>
+          Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))
         }
+        // per-file aggregate: bounded by the commit's file count
+        val perFile = base.groupBy(input_file_name().as("__file"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect()
+        def norm(t: String, v: Any): Option[Any] = Option(v).map {
+          case n: java.lang.Number if t == "i" => java.lang.Long.valueOf(n.longValue())
+          case n: java.lang.Number if t == "f" => java.lang.Double.valueOf(n.doubleValue())
+          case d: java.math.BigDecimal => d.toPlainString
+          case d: scala.math.BigDecimal => d.bigDecimal.toPlainString
+          case s => s.toString
+        }
+        perFile.map { r =>
+          // match to the committed listing through the URI-DECODED path
+          // (input_file_name() returns a URI-encoded string, the
+          // listing holds raw characters — decoding both is the one
+          // rendering they must agree on); fall back to the legacy
+          // Path.toString keying if the string is not a parsable URI
+          // (conservative: worst case the file is kept, never skipped)
+          val raw = r.getAs[String]("__file")
+          val rel = (try Option(new java.net.URI(raw).getPath)
+          catch { case _: Exception => None })
+            .flatMap(decodedToRel.get)
+            .getOrElse(new Path(raw).toString.stripPrefix(rootQ + "/"))
+          rel -> statTyped.map { case (c, t) =>
+            c -> ColStats(t, norm(t, r.getAs[Any](s"__min_$c")), norm(t, r.getAs[Any](s"__max_$c")))
+          }.toMap
+        }.toMap
       }
 
     // roll up the idempotence tags: parent's accumulated map + own tag.
@@ -489,7 +476,7 @@ object Icebergish {
     }
     // Install the manifest ATOMICALLY and EXCLUSIVELY (ADVICE r3):
     // write the bytes to a dot-prefixed temp name — invisible to
-    // maxManifestId's `snap-*.json` listing, so no reader or committer
+    // currentSnapshotId's `snap-*.json` listing, so no reader or committer
     // can observe a zero-byte/partial manifest mid-write — then move it
     // into place with a primitive that FAILS if the destination exists:
     //  - atomicity: a listed `snap-<id>.json` is always complete;
@@ -510,39 +497,6 @@ object Icebergish {
         s"snapshot $id manifest already installed by a concurrent writer " +
           s"(stalled lease fenced, root=$root); re-read the current snapshot and retry", null)
     }
-
-    // atomic pointer flip: write tmp, rename OVER the old pointer in one
-    // filesystem op (FileContext rename with OVERWRITE — posix rename(2)
-    // semantics). The previous delete-then-rename had a window where a
-    // racing reader found no `current` at all (ADVICE r1). A crash BEFORE
-    // this flip is harmless: currentSnapshotId resolves max(pointer,
-    // manifests), so the completed manifest is already visible.
-    val tmp = new Path(root, s"current.tmp-$id")
-    val o2 = f.create(tmp, true)
-    try o2.write(id.toString.getBytes(StandardCharsets.UTF_8))
-    finally o2.close()
-    val cur = new Path(root, "current")
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      f.makeQualified(new Path(root)).toUri, spark.sparkContext.hadoopConfiguration)
-    // The pointer is a fast path, NOT the source of truth — readers
-    // resolve max(pointer, manifests), so a stale (lower-id) pointer is
-    // always safe. CONCURRENT flips can race inside rename(OVERWRITE)'s
-    // delete+rename on some filesystems (observed on LocalFs under a
-    // multi-threaded commit storm): retry briefly, then give up and
-    // clean the tmp — the committed manifest already made this snapshot
-    // visible, and a later commit will advance the pointer.
-    var flipped = false
-    var attempts = 0
-    while (!flipped && attempts < 5) {
-      try {
-        fc.rename(f.makeQualified(tmp), f.makeQualified(cur),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        flipped = true
-      } catch {
-        case _: java.io.IOException => attempts += 1
-      }
-    }
-    if (!flipped) f.delete(tmp, false)
     id
   }
 
@@ -580,7 +534,8 @@ object Icebergish {
           spark.read.option("basePath",
             f.makeQualified(new Path(root, s.dataDir.getOrElse(s"data/snap-${s.id}"))).toString)
         else spark.read
-      reader.parquet(paths: _*)
+      // the recorded schema spares a footer-inference job per snapshot
+      s.schema.fold(reader)(reader.schema).parquet(paths: _*)
     }
     // allowMissingColumns: schema evolution — a snapshot written before a
     // column was added reads as null for that column
@@ -773,14 +728,7 @@ object Icebergish {
         // legacy manifest (pre-roll-up): ground truth is the full scan of
         // every manifest ever written (compaction cuts the chain while the
         // compacted-away commits' data lives on in the rewritten snapshot)
-        val f = fs(spark, root)
-        val mDir = new Path(root, "manifests")
-        if (!f.exists(mDir)) Map.empty
-        else f.listStatus(mDir).toSeq
-          .map(_.getPath.getName)
-          .collect { case n if n.startsWith("snap-") && n.endsWith(".json") =>
-            n.stripPrefix("snap-").stripSuffix(".json").toLong
-          }
+        manifestIds(fs(spark, root), root)
           .sorted
           .filter(_ <= id)
           .map(readManifest(spark, root, _))
@@ -879,11 +827,7 @@ object Icebergish {
     val dDir = new Path(root, "data")
     if (!f.exists(dDir)) return Nil
     val referenced: Set[String] =
-      if (!f.exists(mDir)) Set.empty
-      else f.listStatus(mDir).toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("snap-") && n.endsWith(".json") =>
-          n.stripPrefix("snap-").stripSuffix(".json").toLong
-        }
+      manifestIds(f, root)
         .flatMap { id =>
           val s = readManifest(spark, root, id)
           // dataDir covers post-r3 manifests; file prefixes cover legacy
@@ -1002,7 +946,8 @@ object Icebergish {
     * remedy for streaming's small-files problem (every micro-batch append
     * adds a snapshot whose file count is the shuffle parallelism; after k
     * batches a read opens k×p files). Readers are unaffected mid-compact
-    * (they hold the old pointer until the atomic flip) and time travel to
+    * (they resolved their snapshot before the overwrite manifest was
+    * installed, and read only that snapshot's files) and time travel to
     * pre-compaction snapshots still works: old manifests and data files
     * are immutable and never deleted here. Committed tags survive — the
     * roll-up accumulates through the overwrite.

@@ -99,6 +99,39 @@ object GraftSqlBridge {
     conv(c.node)
   }
 
+  private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Write `df` as parquet under `path` (error if it exists), hive-style
+    * partitioned by `partitionBy`, planned and run as `df.write.partitionBy(…)
+    * .parquet(path)` plans and runs it, and return the rows written: the
+    * write command's `numOutputRows`, which the driver sums from the write
+    * statistics of the committed tasks — exact, with no job and no read of
+    * the written files. Throws if the executed plan holds no write node.
+    */
+  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String]): Long = {
+    import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    val w = df.write.mode(SaveMode.ErrorIfExists).format("parquet")
+    val writer = (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .asInstanceOf[classic.DataFrameWriter[Row]]
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = new QueryExecution(session, writer.saveCommand(Some(path)), df.queryExecution.tracker,
+      shuffleCleanupMode = QueryExecution.determineShuffleCleanupMode(session.sessionState.conf))
+    qe.assertCommandExecuted()
+    // the command runs under AQE (CommandResult → AdaptiveSparkPlanExec →
+    // ResultQueryStage → DataWritingCommandExec); the helper walks both
+    val written = qe.commandExecuted match {
+      case r: CommandResult => PlanWalk.collectFirst(r.commandPhysicalPlan) {
+        case c: DataWritingCommandExec if c.cmd.metrics.contains("numOutputRows") =>
+          c.cmd.metrics("numOutputRows").value
+      }
+      case _ => None
+    }
+    written.getOrElse(throw new IllegalStateException(
+      s"no write command with numOutputRows in the plan that wrote $path"))
+  }
+
   /** Block until the listener bus has delivered every event posted so far
     * (the bus is `private[spark]`): listener events arrive asynchronously,
     * so task metrics read before this can miss the last tasks of an
