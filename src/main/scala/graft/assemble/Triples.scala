@@ -67,6 +67,9 @@ object Triples {
       }
   }
 
+  /** Mapping rows up to which [[canonicalize]] broadcasts the mapping. */
+  private val BroadcastMaxRows = 10000000L
+
   /** Rewrite subj/obj through the canonical component mapping.
     *
     * The mapping side is explicitly `broadcast()` when it is small: the CC
@@ -75,10 +78,7 @@ object Triples {
     * triple table against a 70-row mapping — twice (subj and obj). The
     * count is cheap (components is already materialized by the CC loop).
     */
-  def canonicalize(
-      triples: Dataset[Triple],
-      components: DataFrame,
-      broadcastThreshold: Long = 10000000L): Dataset[Triple] = {
+  def canonicalize(triples: Dataset[Triple], components: DataFrame): Dataset[Triple] = {
     val spark = triples.sparkSession
     import spark.implicits._
     val comp0 = components.select(col("node"), col("component"))
@@ -86,7 +86,7 @@ object Triples {
     // free on the driver, so don't schedule a count() job for it (r6);
     // checkpointed loop outputs still pay the (cheap, materialized) count
     val size = graft.ops.BoundedCollect.localSize(comp0).getOrElse(comp0.count())
-    val comp = if (size <= broadcastThreshold) broadcast(comp0) else comp0
+    val comp = if (size <= BroadcastMaxRows) broadcast(comp0) else comp0
     triples
       .join(comp.withColumnRenamed("node", "subj").withColumnRenamed("component", "subj_c"), Seq("subj"), "left")
       .join(comp.withColumnRenamed("node", "obj").withColumnRenamed("component", "obj_c"), Seq("obj"), "left")

@@ -33,6 +33,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object Canon {
 
+  /** Contraction rounds the loop runs at most before it returns. */
+  private val MaxIter = 20
+
+  /** Salt buckets of the loop's two-phase min (spreads a hub's fan-in). */
+  private val SaltBuckets = 16
+
   /** @param edges two string columns `src`, `dst` (undirected pairs)
     * @param driverMaxEdges adaptive cutover: a graph whose raw edge list
     *        is at most this size resolves with a driver-side union-find —
@@ -52,11 +58,7 @@ object Canon {
     *         contraction path it is a local checkpoint, which
     *         `GraftSqlBridge.release` frees and `unpersist()` does not.
     */
-  def connectedComponents(
-      edges: DataFrame,
-      maxIter: Int = 20,
-      saltBuckets: Int = 16,
-      driverMaxEdges: Long = 100000L): DataFrame = {
+  def connectedComponents(edges: DataFrame, driverMaxEdges: Long = 100000L): DataFrame = {
     val spark = edges.sparkSession
 
     val e0 = edges.select(col("src"), col("dst"))
@@ -145,13 +147,13 @@ object Canon {
     var prevSum = checksum(cur)
     var iter = 0
     var converged = prevSum == null // empty edge set: nothing to contract
-    try while (iter < maxIter && !converged) {
+    try while (iter < MaxIter && !converged) {
       // LARGE-STAR: for each node u, link every LARGER neighbor v to
       // m(u) = min(N(u) ∪ {u}). Salted two-phase min: pre-combine on
       // (u, salt) so a hub's fan-in never lands on one reducer key.
       val bi = cur.union(cur.select(col("dst").as("src"), col("src").as("dst")))
       val mLarge = bi
-        .withColumn("salt", pmod(xxhash64(col("dst")), lit(saltBuckets)))
+        .withColumn("salt", pmod(xxhash64(col("dst")), lit(SaltBuckets)))
         .groupBy(col("src"), col("salt"))
         .agg(min(least(col("dst"), col("src"))).as("m"))
         .groupBy(col("src"))

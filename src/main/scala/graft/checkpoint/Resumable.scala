@@ -30,12 +30,12 @@ import org.apache.spark.sql.functions._
   *
   * A restart reads the progress table AND the triples table's committed
   * chunk tags (the tag rides in the snapshot manifest — transactional
-  * with the atomic pointer flip) and skips completed chunks. A crash
-  * between (4) and (5) therefore does NOT re-append the chunk's triples:
-  * the tag proves the data commit; the restart synthesizes the missing
-  * progress row (recomputed count + lineage hash, triples count from the
-  * tagged manifest) so the lineage table stays complete. Exactly-once
-  * end-to-end.
+  * with the manifest install that commits the chunk) and skips completed
+  * chunks. A crash between (4) and (5) therefore does NOT re-append the
+  * chunk's triples: the tag proves the data commit; the restart
+  * synthesizes the missing progress row (recomputed count + lineage hash,
+  * triples count from the tagged manifest) so the lineage table stays
+  * complete. Exactly-once end-to-end.
   */
 object Resumable {
 
@@ -73,9 +73,8 @@ object Resumable {
       .as[Doc]
   }
 
-  /** Run (or resume) a full pipeline over the docs table.
-    * @param stagingDir where the chunk-partitioned copy of docs lives;
-    *                   defaults to `<progressRoot>/_staging`
+  /** Run (or resume) a full pipeline over the docs table. The
+    * chunk-partitioned copy of docs is staged under `<progressRoot>/_staging`.
     * @param jobId stable identity of the LOGICAL job (docs table →
     *              triples table), shared by every restart of that job but
     *              distinct between different jobs writing into the same
@@ -95,7 +94,6 @@ object Resumable {
       nChunks: Int,
       runId: String,
       failAfterChunks: Int = Int.MaxValue,
-      stagingDir: Option[String] = None,
       jobId: String = "kg",
       feats: Option[graft.detect.Features.FeatureModel] = None): Seq[ChunkProgress] = {
     val spark = docs.sparkSession
@@ -106,21 +104,12 @@ object Resumable {
     // another job whose jobId merely extends this one with a hyphen
     // ("kg-backfill" vs "kg") can never crash the parse or be claimed
     val ownTag = ("^" + java.util.regex.Pattern.quote(tagPrefix) + "(\\d+)$").r
-    // legacy tables (pre-jobId-scoping) tagged chunks "chunk-<n>"; those
-    // belong to the single implicit job of that era and are honored by
-    // its continuation — the DEFAULT jobId only
-    val legacyTag = if (jobId == "kg") Some("^chunk-(\\d+)$".r) else None
-    val staging = stagingDir.getOrElse(s"$progressRoot/_staging")
+    val staging = s"$progressRoot/_staging"
     val progressed = completedChunks(spark, progressRoot)
     // chunks whose DATA commit succeeded (manifest tag) but whose progress
     // row is missing — the crash-between-commit-and-progress window
     val tagRows: Map[Int, Long] =
-      if (!Icebergish.exists(spark, triplesRoot)) Map.empty
-      else Icebergish.tagRows(spark, triplesRoot).toSeq.collect {
-        case (ownTag(n), rows) => n.toInt -> rows
-        case (t, rows) if legacyTag.exists(_.matches(t)) =>
-          legacyTag.get.findFirstMatchIn(t).get.group(1).toInt -> rows
-      }.toMap
+      Icebergish.tagRows(spark, triplesRoot).collect { case (ownTag(n), rows) => n.toInt -> rows }
     val done = progressed ++ tagRows.keySet
     val out = Seq.newBuilder[ChunkProgress]
     var executed = 0

@@ -1,10 +1,8 @@
 package graft.data
 
-import graft.core.{Bio, Doc, Span, TaggedSentence}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
+import graft.core.{Doc, Span, TaggedSentence}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Distributed reader for the reference's BIO corpus format
   * (`/root/reference/utils.py:27-49`): one `char<ws>tag` pair per line,
@@ -12,32 +10,24 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * skipped (`utils.py:41-42`).
   *
   * Scale design: instead of whole-file reads (the reference slurps the file,
-  * `train_enhanced.py:206-207`), we set Hadoop's
-  * `textinputformat.record.delimiter` to a blank line so each SENTENCE is
-  * one input record — the file splits across tasks at sentence boundaries
-  * and a 100 TB corpus parallelizes like any other text source. Record ids
-  * derive from the stable byte offset, so ids are deterministic and
-  * partition-order-independent.
+  * `train_enhanced.py:206-207`), both readers go through the DSv2 `bio`
+  * source ([[graft.sources.BioDataSource]]), which frames each SENTENCE as
+  * one record with a blank-line delimiter — the file splits across tasks at
+  * sentence boundaries and a 100 TB corpus parallelizes like any other text
+  * source. Record ids derive from the stable byte offset, so ids are
+  * deterministic and partition-order-independent.
   */
 object BioCorpus {
 
-  /** Read a BIO file into gold-tagged sentences. `doc_id` is
-    * `"<prefix>-%012d" format byteOffset` — stable across runs/partitions.
+  /** Read a BIO file (or a directory of them) into gold-tagged sentences.
+    * `doc_id` is `"<prefix>-%012d" format byteOffset` — stable across
+    * runs/partitions.
     */
   def read(spark: SparkSession, path: String, idPrefix: String = "bio"): Dataset[TaggedSentence] = {
     import spark.implicits._
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", "\n\n")
-    val rdd = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text], conf)
-      .map { case (off, text) => (off.get(), text.toString) }
-    spark
-      .createDataset(rdd)
-      .flatMap { case (off, block) =>
-        val (chars, tags) = parseBlock(block)
-        if (chars.isEmpty) None
-        else Some(TaggedSentence(f"$idPrefix-$off%012d", 0, chars, tags))
-      }
+    spark.read.format("bio").option("idPrefix", idPrefix).load(path)
+      .select(col("doc_id"), lit(0).as("span_idx"), col("chars"), col("tags"))
+      .as[TaggedSentence]
   }
 
   /** Parse one blank-line-delimited sentence block with the reference's
@@ -82,18 +72,12 @@ object BioCorpus {
     */
   def readIndexed(spark: SparkSession, path: String): Dataset[TaggedSentence] = {
     import spark.implicits._
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", "\n\n")
-    val rdd = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text], conf)
-      .map { case (off, text) => (off.get(), text.toString) }
-      .filter { case (_, block) => parseBlock(block)._1.nonEmpty }
-      .sortBy(_._1)
+    val rdd = read(spark, path).rdd
+      // the byte offset is the numeric tail of the id; a string sort
+      // would misorder offsets past 12 digits
+      .sortBy(ts => ts.doc_id.substring(ts.doc_id.lastIndexOf('-') + 1).toLong)
       .zipWithIndex()
-    spark.createDataset(rdd.map { case ((_, block), idx) =>
-      val (chars, tags) = parseBlock(block)
-      TaggedSentence(f"s$idx%09d", 0, chars, tags)
-    })
+    spark.createDataset(rdd.map { case (ts, idx) => ts.copy(doc_id = f"s$idx%09d") })
   }
 
   /** Pack gold sentences into the authoritative docs-table shape (one text

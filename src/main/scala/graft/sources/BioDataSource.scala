@@ -28,10 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * .load(path)` — the remaining Spark extension axis after expressions,
   * aggregates, the optimizer rule, the planner strategy, and the
   * generator: a first-class connector with its OWN split planning and
-  * column pruning, instead of the RDD-based reader in
-  * [[graft.data.BioCorpus.read]] (kept — both share [[BioCorpus.parseBlock]]
-  * and byte-offset doc ids, so the two paths are row-identical and
-  * cross-checked in BioSourceSpec).
+  * column pruning. It is the one BIO reader: [[graft.data.BioCorpus.read]]
+  * and `readIndexed` read through it, and blocks parse with
+  * [[BioCorpus.parseBlock]].
   *
   * Scale design: [[BioScan.planInputPartitions]] slices every file into
   * `maxSplitBytes` byte ranges (one [[InputPartition]] each — a 100 TB
@@ -222,8 +221,6 @@ case class BioScan(
   * byte-range splits without re-listing the directory, and a file that
   * vanished or shrank since the offset was written fails loudly instead
   * of being silently dropped from the replayed batch (exactly-once).
-  * Length -1 marks a legacy (name-only) offset entry — splits for those
-  * fall back to a live listing at plan time.
   */
 case class BioOffset(files: Map[String, Long]) extends Offset {
   override def json(): String =
@@ -233,16 +230,14 @@ case class BioOffset(files: Map[String, Long]) extends Offset {
 }
 
 object BioOffset {
-  def ofNames(names: Set[String]): BioOffset =
-    BioOffset(names.iterator.map(_ -> -1L).toMap)
 
-  /** Parse `json()` output, accepting the legacy flat-string-array form
-    * (pre-length offsets in existing checkpoints parse as length -1).
-    * A character scan honoring backslash escapes, NOT a delimiter
-    * split — a filename containing `","` or `",123]` would fool any
-    * quote-splitting regex (caught by the hostile-filename round-trip
-    * property test). The writer only escapes `\` and `"`, so unescaping
-    * is "take the next char verbatim".
+  /** Parse `json()` output. A character scan honoring backslash escapes,
+    * NOT a delimiter split — a filename containing `","` or `",123]`
+    * would fool any quote-splitting regex (caught by the hostile-filename
+    * round-trip property test). The writer only escapes `\` and `"`, so
+    * unescaping is "take the next char verbatim". An entry without a
+    * length throws: read as zero bytes, its file would replay in a later
+    * batch and break exactly-once.
     */
   def fromJson(json: String): BioOffset = {
     val out = Map.newBuilder[String, Long]
@@ -260,24 +255,15 @@ object BioOffset {
             case c => sb.append(c); i += 1
           }
         }
-        // after the closing quote: `,<digits>]` in the pair form, `,` or
-        // `]` directly in the legacy flat form
-        var len = -1L
-        if (i < n && json.charAt(i) == ',') {
-          var j = i + 1
-          var v = 0L
-          var any = false
-          var neg = false
-          if (j < n && json.charAt(j) == '-') { neg = true; j += 1 }
-          while (j < n && json.charAt(j).isDigit) {
-            v = v * 10 + (json.charAt(j) - '0'); j += 1; any = true
-          }
-          if (any && j < n && json.charAt(j) == ']') {
-            len = if (neg) -v else v
-            i = j // leave the ']' to the outer scan
-          }
-        }
-        out += sb.toString -> len
+        // after the closing quote: `,<digits>]`
+        val digits = i + 1
+        var j = digits
+        while (j < n && json.charAt(j).isDigit) j += 1
+        if (i >= n || json.charAt(i) != ',' || j == digits || j >= n || json.charAt(j) != ']')
+          throw new IllegalArgumentException(
+            s"bio stream offset entry \"$sb\" has no byte length")
+        out += sb.toString -> json.substring(digits, j).toLong
+        i = j // leave the ']' to the outer scan
       } else i += 1
     }
     BioOffset(out.result())
@@ -313,9 +299,7 @@ class BioMicroBatchStream(
     * VALIDATE: a fresh file that is absent or shorter than its recorded
     * length (e.g. deleted by a truncate overwrite since the offset was
     * written) fails the replay loudly — silently skipping it would break
-    * the exactly-once contract. Legacy name-only entries (length -1,
-    * from pre-length checkpoints) take their split geometry from the
-    * listing instead.
+    * the exactly-once contract.
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val seen = start.asInstanceOf[BioOffset].files.keySet
@@ -324,18 +308,12 @@ class BioMicroBatchStream(
     if (fresh.isEmpty) return Array.empty
     val listed = BioFiles.list(path, GraftSqlBridge.activeHadoopConf())
       .map(f => f.getPath.toString -> f.getLen).toMap
-    fresh.toSeq.sortBy(_._1).flatMap { case (name, recordedLen) =>
+    fresh.toSeq.sortBy(_._1).flatMap { case (name, len) =>
       val currentLen = listed.get(name)
-      val len =
-        if (recordedLen >= 0L) {
-          if (currentLen.forall(_ < recordedLen)) throw new IllegalStateException(
-            s"bio stream replay: file $name recorded at $recordedLen bytes in the " +
-              s"committed offset is ${currentLen.fold("absent")(l => s"now $l bytes")} — " +
-              "cannot replay the batch exactly-once")
-          recordedLen
-        } else currentLen.getOrElse(throw new IllegalStateException(
-          s"bio stream replay: file $name named in a legacy offset is absent — " +
-            "cannot replay the batch exactly-once"))
+      if (currentLen.forall(_ < len)) throw new IllegalStateException(
+        s"bio stream replay: file $name recorded at $len bytes in the " +
+          s"committed offset is ${currentLen.fold("absent")(l => s"now $l bytes")} — " +
+          "cannot replay the batch exactly-once")
       (0L until len by maxSplitBytes).map { off =>
         BioInputPartition(name, off, math.min(maxSplitBytes, len - off))
       }
@@ -367,7 +345,7 @@ case class BioReaderFactory(
   * [[LineRecordReader]]; this class only parses blocks (shared
   * [[BioCorpus.parseBlock]] — reference-exact line semantics) and builds
   * pruned [[InternalRow]]s. Blocks that parse to zero pairs (all-blank /
-  * all-malformed) are skipped, matching `BioCorpus.read`.
+  * all-malformed) are skipped.
   */
 class BioPartitionReader(
     partition: BioInputPartition,

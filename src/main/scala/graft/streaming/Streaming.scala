@@ -16,16 +16,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   */
 object Streaming {
 
-  /** Streaming source over a docs-table directory (parquet files arriving
-    * over time). Schema must be supplied in streaming reads.
-    *
-    * @param maxFilesPerTrigger bound the files ingested per micro-batch
-    *   (0 = unbounded). The production knob for a 100 TB backfill: an
-    *   unbounded AvailableNow drain would put the WHOLE backlog into one
-    *   micro-batch — one giant commit, no incremental checkpoints;
-    *   bounding it yields steady bounded-size batches, each one an
-    *   idempotent snapshot commit in [[kgStream]].
-    */
   /** Streaming docs from a BIO corpus directory through the DSv2 `bio`
     * connector ([[graft.sources.BioDataSource]]): each micro-batch is
     * the newly arrived BIO files, parsed at byte-range granularity and
@@ -45,6 +35,16 @@ object Streaming {
       .as[Doc]
   }
 
+  /** Streaming source over a docs-table directory (parquet files arriving
+    * over time). Schema must be supplied in streaming reads.
+    *
+    * @param maxFilesPerTrigger bound the files ingested per micro-batch
+    *   (0 = unbounded). The production knob for a 100 TB backfill: an
+    *   unbounded AvailableNow drain would put the WHOLE backlog into one
+    *   micro-batch — one giant commit, no incremental checkpoints;
+    *   bounding it yields steady bounded-size batches, each one an
+    *   idempotent snapshot commit in [[kgStream]].
+    */
   def docsStream(spark: SparkSession, path: String, maxFilesPerTrigger: Int = 0): Dataset[Doc] = {
     import spark.implicits._
     val reader = spark.readStream
@@ -124,36 +124,20 @@ object Streaming {
     val offsets = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
     val cfs = offsets.getFileSystem(spark0.sparkContext.hadoopConfiguration)
     val freshCheckpoint = !cfs.exists(offsets) || cfs.listStatus(offsets).isEmpty
-    // legacy unscoped `batch-<n>` tags belong to the single IMPLICIT
-    // writer of the pre-scoping era — only a writer that did NOT pass an
-    // explicit appId may adopt them (mirrors Resumable's jobId=="kg"-only
-    // legacy rule). An explicitly-named writer sharing a table with a
-    // legacy stream must neither skip on, nor trip over, those tags
-    // (ADVICE r3: a scoped writer resuming a non-fresh checkpoint used to
-    // silently skip any batch whose ordinal matched a legacy tag).
-    val adoptLegacyTags = appId.isEmpty
-    if (freshCheckpoint && graft.tables.Icebergish.exists(spark0, triplesRoot) &&
-      graft.tables.Icebergish.committedTags(spark0, triplesRoot)
-        .exists(t => t.startsWith(s"batch-$writerId-") ||
-          (adoptLegacyTags && t.matches("batch-\\d+"))))
+    // a writer only ever matches tags scoped by its own id: tags of other
+    // writers, scoped or not, neither trip this guard nor dedupe a batch
+    if (freshCheckpoint && graft.tables.Icebergish.committedTags(spark0, triplesRoot)
+        .exists(_.startsWith(s"batch-$writerId-")))
       throw new IllegalStateException(
         s"fresh checkpoint at $checkpoint but $triplesRoot already holds commits from " +
-          s"writer $writerId (or a legacy unscoped stream it would adopt): restarting " +
-          "batch ids at 0 would silently skip new data. Keep the original checkpoint, " +
-          "or pass a distinct appId for a genuinely new ingestion (explicitly-named " +
-          "writers ignore legacy unscoped tags).")
+          s"writer $writerId: restarting batch ids at 0 would silently skip new data. " +
+          "Keep the original checkpoint, or pass a distinct appId for a genuinely new " +
+          "ingestion.")
     docs.writeStream
       .foreachBatch { (batch: Dataset[Doc], batchId: Long) =>
         val spark = batch.sparkSession
         val tag = s"batch-$writerId-$batchId"
-        val tags = graft.tables.Icebergish.committedTags(spark, triplesRoot)
-        // legacy compat: a batch committed as "batch-<n>" before tags were
-        // writer-scoped must still dedupe its own re-delivery across the
-        // upgrade — but ONLY for the implicit (appId-less) writer that
-        // era had; an explicitly-named writer never matches legacy tags
-        val done = tags.contains(tag) ||
-          (adoptLegacyTags && tags.contains(s"batch-$batchId"))
-        if (!done) {
+        if (!graft.tables.Icebergish.committedTags(spark, triplesRoot).contains(tag)) {
           val (triples, cleanup) =
             graft.pipeline.KgPipeline.runWithCleanup(batch, lexicon, feats = feats)
           graft.tables.Icebergish.commit(

@@ -35,9 +35,7 @@ final class ConcurrentCommitException(msg: String, cause: Throwable)
   *  - a COMPLETE MANIFEST IS VISIBILITY: the manifest is the last artifact
   *    a commit writes, and [[currentSnapshotId]] is the max manifest id in
   *    `manifests/`. There is no pointer file to flip, so no crash window
-  *    between commit and visibility. (Tables written before the pointer
-  *    was dropped may still hold a `current` file; it is ignored — it
-  *    could never exceed the max manifest id, which always decided.)
+  *    between commit and visibility.
   *  - optimistic concurrency: each writer stages data under a UNIQUE
   *    nonce'd directory, atomically claims the snapshot id (`locks/`,
   *    mkdir-exclusive), writes the manifest to a dot-prefixed temp name
@@ -54,6 +52,11 @@ final class ConcurrentCommitException(msg: String, cause: Throwable)
   *
   * Append manifests reference their parent; the effective file set is the
   * union along the parent chain (cut by an `overwrite` manifest).
+  *
+  * A reader reads only the manifest format [[commit]] writes: a manifest
+  * that lacks a field the reader needs fails with an
+  * `IllegalArgumentException` naming the manifest and the field, instead
+  * of being read by a guess.
   *
   * Idempotence tags ROLL UP: every manifest carries the accumulated
   * `tags` map (tag → rows) of its whole history, so [[committedTags]] /
@@ -88,13 +91,12 @@ object Icebergish {
       files: Seq[String],
       rows: Long,
       committedAt: String,
-      partitionBy: Seq[String] = Nil,
-      tag: Option[String] = None,
-      dataDir: Option[String] = None, // nonce'd; pre-r3 manifests lack it
-      tags: Option[Map[String, Long]] = None, // rolled-up tag → rows
-      removedFiles: Seq[String] = Nil, // "replace" mode: files dropped from the parent's effective set
-      fileStats: Map[String, Map[String, ColStats]] = Map.empty, // relpath → col → bounds
-      schema: Option[StructType] = None) // the committed frame's; None = read with inference
+      partitionBy: Seq[String], // empty = unpartitioned
+      dataDir: String, // nonce'd: data/snap-<id>-<nonce>
+      tags: Map[String, Long], // rolled-up tag → rows
+      removedFiles: Seq[String], // "replace" mode: files dropped from the parent's effective set
+      fileStats: Map[String, Map[String, ColStats]], // relpath → col → bounds
+      schema: StructType) // the committed frame's
 
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -179,9 +181,7 @@ object Icebergish {
   /** Current snapshot = the max manifest id. A listed manifest is complete
     * (it is installed atomically, after the data files), and no manifest
     * is ever deleted, so the max id only grows; one listing of
-    * `manifests/` resolves it. A `current` file left by an older version
-    * of this layer is not read: it was written after its manifest, so it
-    * never exceeded this max.
+    * `manifests/` resolves it.
     */
   def currentSnapshotId(spark: SparkSession, root: String): Option[Long] =
     manifestIds(fs(spark, root), root).maxOption
@@ -197,39 +197,42 @@ object Icebergish {
       }
   }
 
+  /** Parse one manifest. Fields [[commit]] always writes are required;
+    * a missing one throws `IllegalArgumentException` naming the manifest
+    * and the field. Keys the writer omits when empty (`partition_by`,
+    * `tags`, `removed_files`, `file_stats`) read as empty.
+    */
   def readManifest(spark: SparkSession, root: String, id: Long): Snapshot = {
     manifestReadCount.incrementAndGet()
-    val f = fs(spark, root)
-    val in = f.open(new Path(root, s"manifests/snap-$id.json"))
+    val path = new Path(root, s"manifests/snap-$id.json")
+    val in = fs(spark, root).open(path)
     val m =
       try mapper.readValue(in.readAllBytes(), classOf[java.util.Map[String, Object]])
       finally in.close()
+    def opt(key: String): Option[Object] = Option(m.get(key))
+    def req(key: String): Object = opt(key).getOrElse(
+      throw new IllegalArgumentException(s"manifest $path has no '$key' field"))
+    def strings(v: Object): Seq[String] = v.asInstanceOf[java.util.List[String]].asScala.toSeq
+    def entries(v: Object): Map[String, Object] =
+      v.asInstanceOf[java.util.Map[String, Object]].asScala.toMap
     Snapshot(
-      m.get("snapshot").toString.toLong,
-      m.get("parent").toString.toLong,
-      m.get("mode").toString,
-      m.get("files").asInstanceOf[java.util.List[String]].asScala.toSeq,
-      m.get("rows").toString.toLong,
-      m.get("committed_at").toString,
-      Option(m.get("partition_by")) // absent in pre-partitioning manifests
-        .map(_.asInstanceOf[java.util.List[String]].asScala.toSeq)
-        .getOrElse(Nil),
-      Option(m.get("tag")).map(_.toString),
-      Option(m.get("data_dir")).map(_.toString),
-      Option(m.get("tags")).map(_.asInstanceOf[java.util.Map[String, Object]]
-        .asScala.map { case (k, v) => k -> v.toString.toLong }.toMap),
-      Option(m.get("removed_files"))
-        .map(_.asInstanceOf[java.util.List[String]].asScala.toSeq)
-        .getOrElse(Nil),
-      Option(m.get("file_stats"))
-        .map(_.asInstanceOf[java.util.Map[String, Object]].asScala.map { case (file, cols) =>
-          file -> cols.asInstanceOf[java.util.Map[String, Object]].asScala.map { case (c, st) =>
-            val sm = st.asInstanceOf[java.util.Map[String, Object]]
-            c -> ColStats(sm.get("t").toString, Option(sm.get("min")), Option(sm.get("max")))
-          }.toMap
-        }.toMap)
-        .getOrElse(Map.empty),
-      Option(m.get("schema")).map(j => DataType.fromJson(j.toString).asInstanceOf[StructType]))
+      req("snapshot").toString.toLong,
+      req("parent").toString.toLong,
+      req("mode").toString,
+      strings(req("files")),
+      req("rows").toString.toLong,
+      req("committed_at").toString,
+      opt("partition_by").map(strings).getOrElse(Nil),
+      req("data_dir").toString,
+      opt("tags").map(entries(_).map { case (k, v) => k -> v.toString.toLong }).getOrElse(Map.empty),
+      opt("removed_files").map(strings).getOrElse(Nil),
+      opt("file_stats").map(entries(_).map { case (file, cols) =>
+        file -> entries(cols).map { case (c, st) =>
+          val sm = entries(st)
+          c -> ColStats(sm("t").toString, sm.get("min"), sm.get("max"))
+        }
+      }).getOrElse(Map.empty),
+      DataType.fromJson(req("schema").toString).asInstanceOf[StructType])
   }
 
   /** Manifest chain contributing to snapshot `id`, oldest first — cut at
@@ -425,7 +428,7 @@ object Icebergish {
     // Accumulates through overwrites too — compaction must not forget
     // which units of work were committed.
     val accTags: Map[String, Long] =
-      (if (parent >= 0) tagRowsAt(spark, root, parent) else Map.empty[String, Long]) ++
+      (if (parent >= 0) readManifest(spark, root, parent).tags else Map.empty[String, Long]) ++
         tag.map(_ -> rows).toMap
 
     val manifest = new java.util.LinkedHashMap[String, Object]()
@@ -531,11 +534,10 @@ object Icebergish {
       val f = fs(spark, root)
       val reader =
         if (s.partitionBy.nonEmpty)
-          spark.read.option("basePath",
-            f.makeQualified(new Path(root, s.dataDir.getOrElse(s"data/snap-${s.id}"))).toString)
+          spark.read.option("basePath", f.makeQualified(new Path(root, s.dataDir)).toString)
         else spark.read
       // the recorded schema spares a footer-inference job per snapshot
-      s.schema.fold(reader)(reader.schema).parquet(paths: _*)
+      reader.schema(s.schema).parquet(paths: _*)
     }
     // allowMissingColumns: schema evolution — a snapshot written before a
     // column was added reads as null for that column
@@ -709,33 +711,12 @@ object Icebergish {
   def committedTags(spark: SparkSession, root: String): Set[String] =
     tagRows(spark, root).keySet
 
-  /** tag → committed row count. Reads ONE manifest when the current
-    * manifest carries the rolled-up `tags` map (every manifest written
-    * since r3 does); falls back to the full-scan of all manifests only
-    * for pre-roll-up tables. The latest manifest wins a duplicated tag.
+  /** tag → committed row count: the rolled-up `tags` map of the current
+    * manifest, ONE manifest read whether or not the table has ever held
+    * a tag. The latest commit wins a duplicated tag.
     */
   def tagRows(spark: SparkSession, root: String): Map[String, Long] =
-    currentSnapshotId(spark, root) match {
-      case None => Map.empty
-      case Some(id) => tagRowsAt(spark, root, id)
-    }
-
-  private def tagRowsAt(spark: SparkSession, root: String, id: Long): Map[String, Long] = {
-    val s = readManifest(spark, root, id)
-    s.tags match {
-      case Some(acc) => acc
-      case None =>
-        // legacy manifest (pre-roll-up): ground truth is the full scan of
-        // every manifest ever written (compaction cuts the chain while the
-        // compacted-away commits' data lives on in the rewritten snapshot)
-        manifestIds(fs(spark, root), root)
-          .sorted
-          .filter(_ <= id)
-          .map(readManifest(spark, root, _))
-          .collect { case m if m.tag.isDefined => m.tag.get -> m.rows }
-          .toMap
-    }
-  }
+    currentSnapshotId(spark, root).fold(Map.empty[String, Long])(readManifest(spark, root, _).tags)
 
   /** Partition-scoped copy-on-write UPSERT: rows of `df` replace current
     * rows with the same `keyCols` values, rewriting ONLY the partitions
@@ -827,13 +808,7 @@ object Icebergish {
     val dDir = new Path(root, "data")
     if (!f.exists(dDir)) return Nil
     val referenced: Set[String] =
-      manifestIds(f, root)
-        .flatMap { id =>
-          val s = readManifest(spark, root, id)
-          // dataDir covers post-r3 manifests; file prefixes cover legacy
-          s.dataDir.toSeq ++ s.files.map(_.split("/").take(2).mkString("/"))
-        }
-        .map(_.stripPrefix("data/")).toSet
+      manifestIds(f, root).map(readManifest(spark, root, _).dataDir.stripPrefix("data/")).toSet
     // crashed writers also leave dot-prefixed temp manifests (a completed
     // install deletes its temp; only a crash between write and
     // link/rename leaves one) and broken-lease markers behind — both are

@@ -6,10 +6,10 @@ import java.nio.file.{Files, Paths}
 import graft.data.BioCorpus
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The DataSource V2 `bio` connector: row-identical to the RDD-based
-  * `BioCorpus.read` (shared parser, shared byte-offset ids), correct
-  * across byte-range splits that land mid-sentence, and column-pruned
-  * at the scan.
+/** The DataSource V2 `bio` connector (and `BioCorpus.read`, which reads
+  * through it): row-identical to a driver-side replica of the blank-line
+  * framing (shared parser, byte-offset ids), correct across byte-range
+  * splits that land mid-sentence, and column-pruned at the scan.
   */
 class BioSourceSpec extends AnyFunSuite {
   lazy val spark = SparkTest.spark
@@ -40,16 +40,33 @@ class BioSourceSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getSeq[String](1), r.getSeq[String](2)))
       .toSeq.sortBy(_._1)
 
-  test("row-identical to BioCorpus.read on the same file (ids included)") {
+  /** The blank-line framing replicated on the driver: the file's bytes
+    * split at each `"\n\n"`, every block keyed by the byte offset it
+    * starts at and parsed with `parseBlock`; blocks with no pair dropped.
+    */
+  private def replica(path: String) = {
+    val bytes = Files.readAllBytes(Paths.get(path))
+    val rows = Seq.newBuilder[(String, Seq[String], Seq[String])]
+    var start = 0
+    while (start < bytes.length) {
+      var end = start
+      while (end < bytes.length && !(bytes(end) == '\n' && end + 1 < bytes.length && bytes(end + 1) == '\n'))
+        end += 1
+      val (chars, tags) =
+        BioCorpus.parseBlock(new String(bytes, start, end - start, StandardCharsets.UTF_8))
+      if (chars.nonEmpty) rows += ((f"bio-$start%012d", chars, tags))
+      start = end + 2
+    }
+    rows.result().sortBy(_._1)
+  }
+
+  test("row-identical to a driver-side replica of the BIO framing (ids included)") {
     val path = writeBio(sample)
-    val v2 = collectRows(spark.read.format("bio").load(path))
-    val rdd = BioCorpus.read(spark, path).toDF()
-      .select("doc_id", "chars", "tags").collect()
-      .map(r => (r.getString(0), r.getSeq[String](1), r.getSeq[String](2)))
-      .toSeq.sortBy(_._1)
-    assert(v2 == rdd)
-    assert(v2.size == 3) // the all-malformed block parses to zero pairs and is skipped
-    assert(v2.head._2 == Seq("患", "者") && v2.head._3 == Seq("B-Diseases", "I-Diseases"))
+    val expected = replica(path)
+    assert(collectRows(spark.read.format("bio").load(path)) == expected)
+    assert(collectRows(BioCorpus.read(spark, path).toDF()) == expected)
+    assert(expected.size == 3) // the all-malformed block parses to zero pairs and is skipped
+    assert(expected.head._2 == Seq("患", "者") && expected.head._3 == Seq("B-Diseases", "I-Diseases"))
   }
 
   test("byte-range splits that land mid-sentence read every block exactly once") {
@@ -79,16 +96,12 @@ class BioSourceSpec extends AnyFunSuite {
     assert(ids.forall(_.startsWith("ref-")))
   }
 
-  test("parity with BioCorpus.read on the reference's real test corpus") {
+  test("parity with the driver-side replica on the reference's real test corpus") {
     assume(new java.io.File("/root/reference/data/test.txt").isFile)
     val path = "/root/reference/data/test.txt"
     // force multiple splits so the boundary logic runs on real data
-    val v2 = spark.read.format("bio").option("maxSplitBytes", "65536").load(path)
-      .select("doc_id", "chars", "tags")
-    val rdd = BioCorpus.read(spark, path).toDF().select("doc_id", "chars", "tags")
-    assert(v2.count() == rdd.count())
-    // exceptAll both ways — exact multiset equality, ids included
-    assert(v2.exceptAll(rdd).isEmpty && rdd.exceptAll(v2).isEmpty)
+    val v2 = collectRows(spark.read.format("bio").option("maxSplitBytes", "65536").load(path))
+    assert(v2 == replica(path))
   }
 
   test("write path: connector write → connector read roundtrips the sentence multiset") {
@@ -268,8 +281,8 @@ class BioSourceSpec extends AnyFunSuite {
     graft.streaming.Streaming.kgStream(
       graft.streaming.Streaming.bioDocsStream(spark, srcDir), lex, outRoot, ckpt)
       .awaitTermination()
-    // batch replica over the SAME files via the RDD reader (ids match the
-    // connector's byte-offset scheme, so triples compare doc-for-doc)
+    // batch replica over the SAME files via the batch reader (same
+    // byte-offset ids, so triples compare doc-for-doc)
     val batchDocs = graft.data.BioCorpus.toDocs(graft.data.BioCorpus.read(spark, srcDir))
     val expected = tripleSet(graft.pipeline.KgPipeline.run(batchDocs, lex).toDF())
     assert(expected.nonEmpty)
@@ -301,11 +314,6 @@ class BioSourceSpec extends AnyFunSuite {
     val hostileWithLen = hostile.zipWithIndex.map { case (f, i) => f -> (i * 1000L + 7L) }.toMap
     assert(BioOffset.fromJson(BioOffset(hostileWithLen).json()) == BioOffset(hostileWithLen))
     assert(BioOffset.fromJson(BioOffset(Map.empty[String, Long]).json()).files.isEmpty)
-    // legacy flat-string-array offsets (pre-length checkpoints) parse as
-    // length -1 — including names that LOOK like pair suffixes
-    val legacy = """["/a/plain.txt","/a/tricky\",123].txt"]"""
-    assert(BioOffset.fromJson(legacy) ==
-      BioOffset.ofNames(Set("/a/plain.txt", "/a/tricky\",123].txt")))
     // randomized round-trip over a nasty alphabet (incl. digits and ])
     val rnd = new scala.util.Random(7)
     val alphabet = "ab\"\\, /.]0129"
@@ -341,9 +349,19 @@ class BioSourceSpec extends AnyFunSuite {
     // ... and so does a file that vanished entirely
     Files.delete(f)
     intercept[IllegalStateException](stream.planInputPartitions(start, end))
-    // a legacy name-only offset over an absent file also fails loudly
-    intercept[IllegalStateException](
-      stream.planInputPartitions(start, BioOffset.ofNames(Set(name))))
+  }
+
+  test("an offset entry without a byte length is refused, not replayed as empty") {
+    import graft.sources.BioOffset
+    // a bare name, a name followed by another entry, and a name whose
+    // length is not a number: each would replay its file from an unknown
+    // length, so each fails loudly and names the entry
+    Seq("""["/a/x.txt"]""", """["/a/x.txt","/a/y.txt"]""", """[["/a/x.txt",-1]]""").foreach { json =>
+      val e = intercept[IllegalArgumentException](BioOffset.fromJson(json))
+      assert(e.getMessage.contains("/a/x.txt"), e.getMessage)
+    }
+    // a name that only LOOKS like a pair suffix still needs its own length
+    intercept[IllegalArgumentException](BioOffset.fromJson("""["/a/tricky\",123].txt"]"""))
   }
 
   test("scan reports file-census statistics; a small bio table auto-broadcasts in a join") {

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * count comes from the write (no read-back of the committed files), and
   * a read uses each manifest's recorded schema (no footer-inference job
   * per snapshot). Row counts, file stats and read schemas are pinned
-  * against what reading the committed files says.
+  * against what reading the committed files says. Manifest reads per
+  * commit do not grow with the table, and a manifest the reader cannot
+  * read fails loudly.
   */
 class IcebergCommitSpec extends AnyFunSuite {
   lazy val spark = SparkTest.spark
@@ -72,7 +74,7 @@ class IcebergCommitSpec extends AnyFunSuite {
         // files gives: same names, order, types and nullability
         val inferred = {
           val r = spark.read
-          (if (c.partitionBy.nonEmpty) r.option("basePath", s"$root/${m0.dataDir.get}") else r)
+          (if (c.partitionBy.nonEmpty) r.option("basePath", s"$root/${m0.dataDir}") else r)
             .parquet(m0.files.map(f => s"$root/$f"): _*)
         }
         assert(read.schema == inferred.schema, s"${c.name}: ${read.schema} vs ${inferred.schema}")
@@ -114,5 +116,36 @@ class IcebergCommitSpec extends AnyFunSuite {
     val j12 = jobsOf { n12 = Icebergish.read(spark, twelve).count() }
     assert(n1 == 100 && n12 == 1200)
     assert(j12 == j1, s"12 snapshots: $j12 jobs, 1 snapshot: $j1")
+  }
+
+  test("untagged commits read at most two manifests each, and tagRows reads one") {
+    import spark.implicits._
+    val root = tmpRoot()
+    val df = Seq((1, "a")).toDF("id", "v")
+    val perCommit = (0 until 30).map { _ =>
+      val before = Icebergish.manifestReadCount.get()
+      Icebergish.commit(df, root)
+      Icebergish.manifestReadCount.get() - before
+    }
+    assert(perCommit.forall(_ <= 2), s"manifest reads per commit: $perCommit")
+    val before = Icebergish.manifestReadCount.get()
+    assert(Icebergish.tagRows(spark, root).isEmpty)
+    val reads = Icebergish.manifestReadCount.get() - before
+    assert(reads == 1, s"tagRows read $reads manifests on a 30-snapshot untagged table")
+  }
+
+  test("a manifest without a field the reader needs fails loudly, naming the manifest and the field") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Seq("data_dir", "schema", "snapshot").foreach { field =>
+      val root = tmpRoot()
+      Icebergish.commit(triples(10), root, "append", Seq("pred"))
+      val path = java.nio.file.Paths.get(root, "manifests", "snap-0.json")
+      val m = mapper.readValue(java.nio.file.Files.readAllBytes(path), classOf[java.util.LinkedHashMap[String, Object]])
+      assert(m.remove(field) != null, s"the writer wrote no '$field'")
+      java.nio.file.Files.write(path, mapper.writeValueAsBytes(m))
+      val e = intercept[IllegalArgumentException](Icebergish.read(spark, root))
+      assert(e.getMessage.contains(s"$root/manifests/snap-0.json") && e.getMessage.contains(s"'$field'"),
+        e.getMessage)
+    }
   }
 }

@@ -115,7 +115,7 @@ class Round2Spec extends AnyFunSuite {
     val chain = (0 until 15).map(i => (f"n$i%02d", f"n${i + 1}%02d")).toDF("src", "dst")
     // driverMaxEdges = 0 forces the ITERATIVE path — this test guards the
     // localCheckpoint loop, which the driver fast path would bypass
-    val cc = Canon.connectedComponents(chain, maxIter = 20, driverMaxEdges = 0L).collect()
+    val cc = Canon.connectedComponents(chain, driverMaxEdges = 0L).collect()
     assert(cc.length == 16)
     assert(cc.forall(_.getString(1) == "n00"), s"labels: ${cc.mkString(",")}")
   }
@@ -125,7 +125,7 @@ class Round2Spec extends AnyFunSuite {
     // plain min-label propagation would need ~200 iterations here; the
     // large-star/small-star alternation must finish in O(log n) rounds
     val chain = (0 until 199).map(i => (f"n$i%03d", f"n${i + 1}%03d")).toDF("src", "dst")
-    val cc = Canon.connectedComponents(chain, maxIter = 20, driverMaxEdges = 0L).collect()
+    val cc = Canon.connectedComponents(chain, driverMaxEdges = 0L).collect()
     assert(cc.length == 200)
     assert(cc.forall(_.getString(1) == "n000"))
   }

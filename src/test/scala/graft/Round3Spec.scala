@@ -412,43 +412,6 @@ class Round3Spec extends AnyFunSuite {
     lex.unpersist()
   }
 
-  test("legacy unscoped idempotence tags are honored across the upgrade (Resumable and kgStream guard)") {
-    import spark.implicits._
-    // Resumable: a triples table written by pre-scoping code tagged its
-    // chunks "chunk-<n>"; the default job's restart must SKIP them
-    val g = graft.data.DocsGen.gen(spark, 100, seed = 61).cache()
-    val docs = graft.data.DocsGen.docs(g)
-    val triplesRoot = tmpDir("legacy_triples")
-    val progressRoot = tmpDir("legacy_progress")
-    Icebergish.commit(
-      Seq(("LEGACY", "treated_by", "X", "d0")).toDF("subj", "pred", "obj", "doc_id"),
-      triplesRoot, "append", partitionBy = Seq("pred"), tag = Some("chunk-0"))
-    val progress = graft.checkpoint.Resumable.run(docs, lexicon = graft.data.Lexicon.fromSurfaces(
-      graft.data.DocsGen.vocabEntries.toDS()), triplesRoot, progressRoot, nChunks = 2, runId = "r1")
-    assert(progress.map(_.chunk).sorted == Seq(0, 1)) // 0 healed from the legacy tag, 1 executed
-    val subjects = Icebergish.read(spark, triplesRoot)
-      .filter(col("subj") === "LEGACY").count()
-    assert(subjects == 1) // chunk 0 was NOT re-run (its rows stay the legacy ones)
-
-    // kgStream guard: a fresh checkpoint against a table with LEGACY
-    // batch tags must fail fast, not silently skip new batches
-    val srcDir = tmpDir("legacy_src")
-    graft.data.DocsGen.docs(graft.data.DocsGen.gen(spark, 10, seed = 62))
-      .write.mode("append").parquet(srcDir)
-    val streamRoot = tmpDir("legacy_stream") + "/triples"
-    Icebergish.commit(
-      Seq(("s", "treated_by", "o", "d")).toDF("subj", "pred", "obj", "doc_id"),
-      streamRoot, "append", partitionBy = Seq("pred"), tag = Some("batch-3"))
-    val e = intercept[IllegalStateException] {
-      Streaming.kgStream(
-        Streaming.docsStream(spark, srcDir),
-        graft.data.Lexicon.fromSurfaces(graft.data.DocsGen.vocabEntries.toDS()),
-        streamRoot, tmpDir("legacy_ckpt") + "/ckpt")
-    }
-    assert(e.getMessage.contains("fresh checkpoint"))
-    g.unpersist()
-  }
-
   // ------------------------------------------------------- exact-dedup keys
 
   test("exact dedup survives an engineered first-hash collision (widened identity key)") {

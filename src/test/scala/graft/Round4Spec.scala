@@ -245,45 +245,49 @@ class Round4Spec extends AnyFunSuite {
     assert(got == Seq((1L, 2L), (2L, 0L), (3L, 0L)))
   }
 
-  test("explicitly-named stream writers ignore legacy unscoped batch tags; implicit writers adopt them") {
+  test("stream writers ignore unscoped batch tags, whether named or implicit") {
     import spark.implicits._
     import graft.streaming.Streaming
-    val srcDir = tmpDir("kg_legacy_src")
-    val outRoot = tmpDir("kg_legacy_out") + "/triples"
+    val srcDir = tmpDir("kg_unscoped_src")
+    val outRoot = tmpDir("kg_unscoped_out") + "/triples"
     val lex = graft.data.Lexicon.fromSurfaces(graft.data.DocsGen.vocabEntries.toDS()).cache()
     try {
-      // a pre-scoping legacy stream committed batches tagged "batch-0/1"
+      // another writer committed batches under unscoped "batch-0/1" tags
       Icebergish.commit(
         Seq(("dL", "treated_by", "o")).toDF("doc_id", "pred", "obj"),
         outRoot, "append", partitionBy = Seq("pred"), tag = Some("batch-0"))
       Icebergish.commit(
         Seq(("dL2", "treated_by", "o2")).toDF("doc_id", "pred", "obj"),
         outRoot, "append", partitionBy = Seq("pred"), tag = Some("batch-1"))
-      val legacyRows = Icebergish.read(spark, outRoot).count()
+      val unscopedRows = Icebergish.read(spark, outRoot).count()
 
       val g = graft.data.DocsGen.gen(spark, 30, seed = 41)
       graft.data.DocsGen.docs(g).write.mode("append").parquet(srcDir)
 
       // an explicitly-named writer must neither trip the fresh-checkpoint
-      // guard on the legacy tags nor skip its own batch 0/1 because their
-      // ordinals collide with "batch-0"/"batch-1" (ADVICE r3 low)
+      // guard on those tags nor skip its own batch 0/1 because their
+      // ordinals collide with "batch-0"/"batch-1"
       Streaming.kgStream(
         Streaming.docsStream(spark, srcDir), lex, outRoot,
-        tmpDir("kg_legacy_ckpt_a") + "/ckpt", appId = Some("r4app"))
+        tmpDir("kg_unscoped_ckpt_a") + "/ckpt", appId = Some("r4app"))
         .awaitTermination()
-      assert(Icebergish.read(spark, outRoot).count() > legacyRows,
-        "scoped writer skipped its batches on legacy-tag ordinal collision")
+      val afterNamed = Icebergish.read(spark, outRoot).count()
+      assert(afterNamed > unscopedRows,
+        "scoped writer skipped its batches on an unscoped-tag ordinal collision")
       val tags = Icebergish.committedTags(spark, outRoot)
       assert(tags.exists(_.startsWith("batch-r4app-")), s"missing scoped tag in $tags")
 
-      // the implicit (appId-less) writer is the legacy stream's
-      // continuation: a fresh checkpoint against those tags must refuse
-      val e = intercept[IllegalStateException] {
-        Streaming.kgStream(
-          Streaming.docsStream(spark, srcDir), lex, outRoot,
-          tmpDir("kg_legacy_ckpt_b") + "/ckpt")
-      }
-      assert(e.getMessage.contains("fresh checkpoint"))
+      // the implicit (appId-less) writer is scoped by its checkpoint path
+      // and ignores the unscoped tags the same way: no guard trip, and its
+      // batches commit
+      val ckptB = tmpDir("kg_unscoped_ckpt_b") + "/ckpt"
+      Streaming.kgStream(Streaming.docsStream(spark, srcDir), lex, outRoot, ckptB)
+        .awaitTermination()
+      val implicitId = java.lang.Long.toHexString(graft.core.Hashing.hashString(ckptB))
+      val tagsB = Icebergish.committedTags(spark, outRoot)
+      assert(tagsB.exists(_.startsWith(s"batch-$implicitId-")), s"missing implicit writer's tag in $tagsB")
+      assert(Icebergish.read(spark, outRoot).count() > afterNamed,
+        "implicit writer skipped its batches on an unscoped-tag ordinal collision")
     } finally lex.unpersist()
   }
 
