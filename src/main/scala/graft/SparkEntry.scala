@@ -231,7 +231,7 @@ object SparkEntry {
       val (_, docs) = goldAndDocs(s, dir)
       // explicit width: a bare repartition(col) is AQE-coalesced to one
       // task on tiny shuffles
-      val sents = KgPipeline.sentences(docs).repartition(KgPipeline.detectWidth(s), col("doc_id"))
+      val sents = KgPipeline.sentences(docs).repartition(graft.core.Parallelism.width(s), col("doc_id"))
       graft.detect.Detector
         .detectPartitioned(sents, DocsGen.vocabEntries.toDS())
         .toDF()

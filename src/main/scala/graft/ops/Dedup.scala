@@ -1,9 +1,9 @@
 package graft.ops
 
 import graft.core.Hashing
+import graft.functions.BoundedCollectList
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Deduplication operators for web-scale training-data pipelines:
   * exact, MinHash+LSH, SimHash, and n-gram-Jaccard near-dup detection.
@@ -20,33 +20,30 @@ import org.apache.spark.sql.types.{StructField, StructType}
   */
 object Dedup {
 
-  /** One posting row per group: `groupBy(keys).agg(bounded collect of
-    * `payload` members)` → (`items` array column), groups larger than
-    * `cap` dropped (r6 optimization, guide §2.3/§2.4). The shared
-    * single-shuffle core of all four banding pair generators: the cap is
-    * enforced INSIDE the aggregation buffer ([[BoundedCollectAgg]] caps
-    * at cap+1 entries), so a pathological hub bucket (boilerplate docs,
-    * stopword shingles) costs bounded memory and is then dropped by the
-    * `size <= cap` filter — byte-identical semantics to the old
-    * count-then-join hot-bucket guard, without the counting aggregation,
-    * the filter join, and the two-sided self-join that made every
-    * banding operator scan its input 3-6 times.
+  /** One posting row per group: the `payload` columns of each group's
+    * members as one `ms` array, groups of more than `cap` members dropped
+    * (r6 optimization, guide §2.3/§2.4) — the shared single-shuffle core
+    * of all four banding pair generators. The member rows shuffle ONCE,
+    * by key, to [[graft.core.Parallelism.width]] partitions: the
+    * pair-explode that follows is the quadratic CPU of every banding
+    * operator, and the bytes-based coalescing AQE applies to a groupBy
+    * exchange ran it on fewer tasks than cores. Map-side partial
+    * aggregation would only concatenate lists, so it has nothing to save
+    * before this exchange. The cap is enforced
+    * INSIDE the aggregation buffer ([[graft.functions.BoundedCollectList]]
+    * clears a group at its first overflow), so a pathological hub bucket
+    * (boilerplate docs, stopword shingles) crosses the shuffle once, in
+    * linear bytes, holds at most `cap` members in memory and is then
+    * dropped by its flag — the same decisions as a count-then-join
+    * hot-bucket guard, without the counting aggregation, the filter join
+    * and the two-sided self-join.
     */
-  private def boundedPostings(
-      df: DataFrame,
-      keys: Seq[Column],
-      payload: Seq[Column],
-      paySchema: StructType,
-      cap: Int): DataFrame = {
-    val agg = BoundedCollect.agg(cap, paySchema)
-    df.groupBy(keys: _*)
-      .agg(agg(payload: _*).as("_ms"))
-      // the aggregator's overflow flag IS the hot-bucket decision: an
-      // over-cap bucket collapsed to one boolean at its first overflow
-      // (no cap+1 rows ever shipped) and is dropped here
+  private def boundedPostings(df: DataFrame, keys: Seq[Column], payload: Seq[String], cap: Int): DataFrame =
+    df.repartition(graft.core.Parallelism.width(df.sparkSession), keys: _*)
+      .groupBy(keys: _*)
+      .agg(BoundedCollectList.bounded_collect(payload.map(col), payload, cap).as("_ms"))
       .filter(!col("_ms.over"))
       .select(col("_ms.items").as("ms"))
-  }
 
   /** All unordered member pairs (`a.id < b.id`) of each posting row. */
   private def postingPairs(posting: DataFrame): DataFrame =
@@ -145,7 +142,7 @@ object Dedup {
     // signature kernel over the corpus FOUR times (the plan had 4 scans)
     // and shuffled the banded table three times. Here the corpus is
     // scanned once, the banded rows shuffle once into per-bucket postings
-    // (bounded at maxBucket+1 members — same hot-bucket guard, enforced
+    // (over-maxBucket buckets dropped — same hot-bucket guard, enforced
     // inside the aggregation buffer instead of by a counting join), and
     // pairs + scores are generated by exploding each posting. No persist,
     // no hidden executor state, same output.
@@ -155,12 +152,7 @@ object Dedup {
     // band buckets: hash of each signature slice
     val banded = bandedSigs(sigs, k, bands)
 
-    val paySchema = StructType(Seq(
-      StructField("id", banded.schema("id").dataType, banded.schema("id").nullable),
-      StructField("sig", banded.schema("sig").dataType, false)))
-    val posting = boundedPostings(
-      banded, Seq(col("band"), col("bucket")),
-      Seq(col("id"), col("sig")), paySchema, maxBucket)
+    val posting = boundedPostings(banded, Seq(col("band"), col("bucket")), Seq("id", "sig"), maxBucket)
 
     // Score + threshold BEFORE the pair-dedup shuffle: est_jaccard is
     // deterministic per pair, so the dedup exchange carries (long, long,
@@ -291,12 +283,7 @@ object Dedup {
     // one-scan posting-list plan (see minhashPairs) — the simhash kernel
     // runs once and the banded rows shuffle once, vs 3 scans + a counting
     // join + a two-sided self-join before
-    val paySchema = StructType(Seq(
-      StructField("id", banded.schema("id").dataType, banded.schema("id").nullable),
-      StructField("sh", banded.schema("sh").dataType, banded.schema("sh").nullable)))
-    val posting = boundedPostings(
-      banded, Seq(col("band"), col("bval")),
-      Seq(col("id"), col("sh")), paySchema, maxBucket)
+    val posting = boundedPostings(banded, Seq(col("band"), col("bval")), Seq("id", "sh"), maxBucket)
     // distance + filter before the pair-dedup shuffle: only pairs within
     // the Hamming bound are exchanged (hamming is deterministic per pair)
     postingPairs(posting)
@@ -310,7 +297,7 @@ object Dedup {
   // ---------------------------------------------------------- n-gram Jaccard
 
   /** Exact n-gram Jaccard similarity via an inverted index — fully
-    * relational (explode → df-filter → self-join on shingle → count):
+    * relational (explode → bounded postings → pair explode → count):
     *
     *   |A∩B| = # shared distinct shingles;  |A∪B| = |A| + |B| - |A∩B|
     */
@@ -330,7 +317,7 @@ object Dedup {
     //     shingle count (`sz`, what the old sizes agg computed) is just
     //     size(array), carried along with each posting member so the
     //     final size joins disappear (sz is functionally dependent on id);
-    //   - postings per shingle are bounded at maxDf+1 members (same hub
+    //   - postings of more than maxDf members are dropped (same hub
     //     guard as the old df <= maxDf filter, enforced in the buffer);
     //   - shared-shingle counts come from exploding each posting's pairs.
     // Shuffles: explode→postings (by shingle) + pair-count agg. No
@@ -339,14 +326,16 @@ object Dedup {
       col(idCol).as("id"),
       graft.functions.ShingleHashes.shingle_hashes(
         coalesce(col(textCol), lit("")), w).as("shs"))
-    val exploded = withSh.select(
-      col("id"), size(col("shs")).cast("long").as("sz"), explode(col("shs")).as("shingle"))
+    // explode_outer + a null filter, not explode: Spark infers
+    // `size(shs) > 0` from an inner explode and pushes it below the
+    // Project, which evaluates the shingle kernel a second time per doc.
+    // Shingle hashes are never null, so the filter drops exactly the
+    // empty docs' outer rows.
+    val exploded = withSh
+      .select(col("id"), size(col("shs")).cast("long").as("sz"), explode_outer(col("shs")).as("shingle"))
+      .filter(col("shingle").isNotNull)
 
-    val paySchema = StructType(Seq(
-      StructField("id", exploded.schema("id").dataType, exploded.schema("id").nullable),
-      StructField("sz", org.apache.spark.sql.types.LongType, false)))
-    val posting = boundedPostings(
-      exploded, Seq(col("shingle")), Seq(col("id"), col("sz")), paySchema, maxDf)
+    val posting = boundedPostings(exploded, Seq(col("shingle")), Seq("id", "sz"), maxDf)
 
     val inter = postingPairs(posting)
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -392,13 +381,7 @@ object Dedup {
     // one-scan posting-list plan (see minhashPairs): the embedding scan +
     // norm + banding run once and the banded rows shuffle once, vs 3
     // scans + a counting join + a two-sided self-join before
-    val paySchema = StructType(Seq(
-      StructField("id", withKey.schema("id").dataType, withKey.schema("id").nullable),
-      StructField("v", withKey.schema("v").dataType, withKey.schema("v").nullable),
-      StructField("vn", withKey.schema("vn").dataType, withKey.schema("vn").nullable)))
-    val posting = boundedPostings(
-      withKey, Seq(col("band"), col("bucket")),
-      Seq(col("id"), col("v"), col("vn")), paySchema, maxBucket)
+    val posting = boundedPostings(withKey, Seq(col("band"), col("bucket")), Seq("id", "v", "vn"), maxBucket)
     // exact-cosine verify + threshold BEFORE the pair-dedup shuffle: the
     // dedup exchange carries (long, long, double) rows, not two embedding
     // vectors — at dim=256 that is ~100x less shuffle volume per candidate

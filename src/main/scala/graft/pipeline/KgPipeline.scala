@@ -5,7 +5,7 @@ import graft.canon.Canon
 import graft.core._
 import graft.detect.Detector
 import graft.link.Linker
-import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction pipeline (north_star):
@@ -52,20 +52,6 @@ object KgPipeline {
             struct(s.getField("kind"), s.getField("text"), s.getField("media_ref"), s.getField("offset")))),
         256).as("span_sig"))
 
-  /** Partition count of the detect stage when the caller gives none. It
-    * must be explicit (r6, guide §2.2/§2.5): a bare repartition(col) lets
-    * AQE coalesce by SHUFFLE BYTES, and sentence rows are tiny — at bench
-    * scale the whole detect stage was coalesced to ONE task, serializing
-    * the kernel on one core. Derived from the session (max of cluster
-    * cores and the configured shuffle width), never a constant: locally
-    * that is the core count; on a real cluster whatever parallelism the
-    * session is provisioned for.
-    */
-  def detectWidth(spark: SparkSession): Int =
-    math.max(
-      spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-
   def detectMentions(
       docs: Dataset[Doc],
       gazetteer: Iterable[(String, String)],
@@ -82,7 +68,7 @@ object KgPipeline {
       feats: Option[graft.detect.Features.FeatureModel]): Dataset[Mention] = {
     // explicit repartition by doc_id hash (north_rule) — co-locates a doc's
     // sentences and evens the load before the CPU-bound detector.
-    val width = if (numPartitions > 0) numPartitions else detectWidth(docs.sparkSession)
+    val width = if (numPartitions > 0) numPartitions else Parallelism.width(docs.sparkSession)
     Detector.detect(sentences(docs).repartition(width, col("doc_id")), gazetteer, feats = feats)
   }
 

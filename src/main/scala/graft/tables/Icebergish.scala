@@ -160,22 +160,27 @@ object Icebergish {
     val manifestPath = new Path(root, s"manifests/snap-$id.json")
     val tmpManifest = new Path(root,
       s"manifests/.snap-$id.json.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = f.create(tmpManifest, true)
-    try out.write(bytes)
-    finally out.close()
-    val installed =
-      if (f.getUri.getScheme == "file")
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(f.makeQualified(manifestPath).toUri),
-            java.nio.file.Paths.get(f.makeQualified(tmpManifest).toUri))
-          true
-        } catch { case _: java.io.IOException => false }
-      else
+    if (f.getUri.getScheme == "file") {
+      // java.nio end to end: the local Hadoop filesystem's `create` sets
+      // the file's permissions through a forked `chmod` per call, and
+      // writes a .crc sidecar no reader of the manifest needs
+      val tmp = java.nio.file.Paths.get(f.makeQualified(tmpManifest).toUri)
+      java.nio.file.Files.write(tmp, bytes)
+      try {
+        java.nio.file.Files.createLink(java.nio.file.Paths.get(f.makeQualified(manifestPath).toUri), tmp)
+        true
+      } catch { case _: java.io.IOException => false }
+      finally java.nio.file.Files.deleteIfExists(tmp)
+    } else {
+      val out = f.create(tmpManifest, true)
+      try out.write(bytes)
+      finally out.close()
+      val installed =
         try !f.exists(manifestPath) && f.rename(tmpManifest, manifestPath)
         catch { case _: java.io.IOException => false }
-    f.delete(tmpManifest, false)
-    installed
+      f.delete(tmpManifest, false)
+      installed
+    }
   }
 
   /** Current snapshot = the max manifest id. A listed manifest is complete

@@ -94,7 +94,7 @@ class Round2Spec extends AnyFunSuite {
     // 5 identical docs share every band bucket; 2 other docs are unrelated.
     // cap = 5: the identical group is AT the cap → all C(5,2) = 10 pairs.
     // cap = 4: the group overflows (5 > 4) → its buckets drop → 0 pairs.
-    // This pins the BoundedCollectAgg flag semantics to the old
+    // This pins the bounded-collect flag semantics to the old
     // count-then-join guard's decisions at the exact boundary.
     val docs = ((0 until 5).map(i => (i.toLong, "the quick brown fox jumps over the lazy dog repeatedly")) ++
       Seq((10L, "completely different text one two three four five six seven"),
