@@ -685,10 +685,11 @@ object SparkEntry {
       // the SNAPSHOT TABLE LAYER under the DuckDB gate, through manifest
       // DATA SKIPPING: documents are committed into an Icebergish table
       // as four doc_id-range appends (the chronological-append shape)
-      // with per-file zone maps on doc_id; the query reads through
-      // readPruned, so commits whose bounds refute the predicate are
-      // never scanned — require() makes a silent no-skip regression fail
-      // the query rather than quietly degrade to a full scan.
+      // with per-file zone maps on doc_id; the filtered read prunes in
+      // the scan's file listing, so commits whose bounds refute the
+      // predicate are never scanned — require() makes a silent no-skip
+      // regression fail the query rather than quietly degrade to a full
+      // scan.
       import graft.tables.Icebergish
       val docs = s.read.parquet(t(dir, "documents"))
       val maxId = docs.agg(max("doc_id")).head.getLong(0)
@@ -704,7 +705,7 @@ object SparkEntry {
       val (_, skipped) = Icebergish.pruneFiles(s, root, pred)
       require(skipped.nonEmpty,
         s"zone-map pruning skipped no files for doc_id >= $cut")
-      Icebergish.readPruned(s, root, pred)
+      Icebergish.read(s, root).filter(pred)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
         .orderBy("source")

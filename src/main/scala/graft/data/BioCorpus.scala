@@ -14,14 +14,14 @@ import org.apache.spark.sql.functions.{col, lit}
   * source ([[graft.sources.BioDataSource]]), which frames each SENTENCE as
   * one record with a blank-line delimiter — the file splits across tasks at
   * sentence boundaries and a 100 TB corpus parallelizes like any other text
-  * source. Record ids derive from the stable byte offset, so ids are
-  * deterministic and partition-order-independent.
+  * source. Record ids derive from the file and the stable byte offset, so
+  * ids are deterministic and partition-order-independent.
   */
 object BioCorpus {
 
   /** Read a BIO file (or a directory of them) into gold-tagged sentences.
-    * `doc_id` is `"<prefix>-%012d" format byteOffset` — stable across
-    * runs/partitions.
+    * `doc_id` is [[graft.sources.BioTable.docId]] of the file and the
+    * byte offset — stable across runs/partitions, unique across files.
     */
   def read(spark: SparkSession, path: String, idPrefix: String = "bio"): Dataset[TaggedSentence] = {
     import spark.implicits._
@@ -68,14 +68,19 @@ object BioCorpus {
     * file ("s%09d") — the key for positional alignment with another dump
     * of the same corpus (the reference zips gold/pred lists by position,
     * `evaluate.py:295-302`). Byte offsets are already monotone with
-    * position, so a sort + zipWithIndex is exact and deterministic.
+    * position, so a sort by (file, offset) + zipWithIndex is exact and
+    * deterministic.
     */
   def readIndexed(spark: SparkSession, path: String): Dataset[TaggedSentence] = {
     import spark.implicits._
     val rdd = read(spark, path).rdd
-      // the byte offset is the numeric tail of the id; a string sort
-      // would misorder offsets past 12 digits
-      .sortBy(ts => ts.doc_id.substring(ts.doc_id.lastIndexOf('-') + 1).toLong)
+      // the id is "<prefix>-<file>-<offset>": order by the file component,
+      // then by the offset as a number (a string sort would misorder
+      // offsets past 12 digits)
+      .sortBy { ts =>
+        val cut = ts.doc_id.lastIndexOf('-')
+        (ts.doc_id.substring(0, cut), ts.doc_id.substring(cut + 1).toLong)
+      }
       .zipWithIndex()
     spark.createDataset(rdd.map { case (ts, idx) => ts.copy(doc_id = f"s$idx%09d") })
   }

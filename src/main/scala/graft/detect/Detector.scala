@@ -241,8 +241,9 @@ object Detector {
     * caps single-JVM scaling at high core counts (allocation-rate bound).
     *
     * Its output is bit-identical, confidence included, to the O(L²)
-    * reference path ([[detectOne]]: [[emissions]], [[viterbi]],
-    * [[confidences]]), which it beats by two exact shortcuts:
+    * reference [[detectOne]] under the same transitions and feature
+    * model ([[emissions]], [[viterbi]], [[confidences]]), which it beats
+    * by two exact shortcuts:
     *
     *  - Viterbi by row max. At each position the previous row's max and
     *    its first argmax are taken once. A target label whose
@@ -578,20 +579,14 @@ object Detector {
     out
   }
 
-  /** Decode one sentence with the full kernel (K1→K2→K4→C1). */
-  def detectOne(s: Sentence, gaz: Gazetteer, maxLen: Int): Seq[Mention] = {
-    val chars = tokenize(s.text, maxLen)
-    if (chars.isEmpty) Nil else decode(s.doc_id, s.span_idx, chars, emissions(chars, gaz))
-  }
-
-  /** [[detectOne]] with transitions and a feature model: the O(L²)
-    * reference for [[Kernel]] (it adds the model's scores to
-    * [[emissions]] as the kernel does, then runs [[viterbi]] and
-    * [[confidences]]).
+  /** Decode one sentence with the full kernel (K1→K2→K4→C1): the O(L²)
+    * reference for [[Kernel]]. It adds the feature model's scores, if
+    * any, to [[emissions]] as the kernel does, then runs [[viterbi]] under
+    * `trans` and [[confidences]].
     */
-  private[graft] def detectReference(
+  def detectOne(
       s: Sentence, gaz: Gazetteer, maxLen: Int,
-      trans: Array[Array[Float]], feats: Features.FeatureModel): Seq[Mention] = {
+      trans: Array[Array[Float]] = transitions, feats: Features.FeatureModel = null): Seq[Mention] = {
     val chars = tokenize(s.text, maxLen)
     if (chars.isEmpty) return Nil
     val em = emissions(chars, gaz)

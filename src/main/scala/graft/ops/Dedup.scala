@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** One posting row per group: the `payload` columns of each group's
-    * members as one `ms` array, groups of more than `cap` members dropped
+  /** One posting row per group: the group's `keys` and the `payload`
+    * columns of its members as one `ms` array, groups of more than `cap`
+    * members dropped
     * (r6 optimization, guide §2.3/§2.4) — the shared single-shuffle core
     * of all four banding pair generators. The member rows shuffle ONCE,
     * by key, to [[graft.core.Parallelism.width]] partitions: the
@@ -38,12 +39,12 @@ object Dedup {
     * hot-bucket guard, without the counting aggregation, the filter join
     * and the two-sided self-join.
     */
-  private def boundedPostings(df: DataFrame, keys: Seq[Column], payload: Seq[String], cap: Int): DataFrame =
+  private[ops] def boundedPostings(df: DataFrame, keys: Seq[Column], payload: Seq[String], cap: Int): DataFrame =
     df.repartition(graft.core.Parallelism.width(df.sparkSession), keys: _*)
       .groupBy(keys: _*)
       .agg(BoundedCollectList.bounded_collect(payload.map(col), payload, cap).as("_ms"))
       .filter(!col("_ms.over"))
-      .select(col("_ms.items").as("ms"))
+      .select(keys :+ col("_ms.items").as("ms"): _*)
 
   /** All unordered member pairs (`a.id < b.id`) of each posting row. */
   private def postingPairs(posting: DataFrame): DataFrame =

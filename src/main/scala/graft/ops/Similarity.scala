@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.core.Hashing
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -11,7 +10,7 @@ import org.apache.spark.sql.functions._
   *  - `bruteForceTopK`: exact cosine top-k — broadcast the (small) query
   *    set against the full corpus; dot products via `zip_with`/`aggregate`
   *    higher-order functions (pure Catalyst, codegen'd, no UDF); top-k via
-  *    a BOUNDED partial-aggregation heap (`TopKAgg`), never a window rank:
+  *    a BOUNDED partial-aggregation heap (`TopK.perKey`), never a window rank:
   *    each map task keeps at most k candidates per query, so the shuffle
   *    carries |queries|×k×|tasks| rows instead of |corpus|×|queries|.
   *  - `lshTopK`: the scale path when |queries| is large — banded
@@ -31,51 +30,18 @@ object Similarity {
 
   private[ops] def normCol(x: Column): Column = sqrt(dotCol(x, x))
 
-  /** One scored candidate. */
-  case class Scored(neighbor_id: Long, cosine: Double)
-
-  case class TopKBuf(items: Seq[Scored])
-
-  /** Bounded top-k typed aggregator: the buffer never exceeds k entries
-    * (cosine desc, neighbor_id asc), so partial aggregation caps both
-    * memory and shuffle volume at k per (query, map task). This is the
-    * partial top-k the window-rank plan lacked (r1 VERDICT "Perf" item).
-    *
-    * Duplicate-tolerant: a candidate seen twice (an LSH pair colliding in
-    * several bands — cosine is deterministic per pair, so the copies are
-    * identical) is kept once. That lets `lshTopK` feed raw band-join
-    * candidates straight into the aggregation, with NO dedup exchange of
-    * vector-carrying rows before it.
+  /** Rank `scored(query_id, neighbor_id, cosine)` to per-query top-k
+    * (cosine desc, neighbor_id asc) with the bounded per-key top-k
+    * ([[TopK.perKey]]): each map task forwards at most k candidates per
+    * query. A candidate seen twice (an LSH pair colliding in several
+    * bands — cosine is deterministic per pair, so the copies are
+    * identical rows) counts once, so `lshTopK` feeds raw band-join
+    * candidates straight in, with NO dedup exchange of vector-carrying
+    * rows before it. Emits (query_id, neighbor_id, cosine, rank).
     */
-  class TopKAgg(k: Int) extends Aggregator[Scored, TopKBuf, TopKBuf] {
-    private def lt(a: Scored, b: Scored): Boolean =
-      a.cosine > b.cosine || (a.cosine == b.cosine && a.neighbor_id < b.neighbor_id)
-    private def trim(xs: Seq[Scored]): Seq[Scored] =
-      xs.distinct.sortWith(lt).take(k)
-    override def zero: TopKBuf = TopKBuf(Nil)
-    override def reduce(b: TopKBuf, a: Scored): TopKBuf =
-      if (b.items.length >= k && lt(b.items.last, a)) b else TopKBuf(trim(b.items :+ a))
-    override def merge(a: TopKBuf, b: TopKBuf): TopKBuf = TopKBuf(trim(a.items ++ b.items))
-    override def finish(r: TopKBuf): TopKBuf = r
-    override def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-    override def outputEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-  }
-
-  /** Rank `scored(query_id, neighbor_id, cosine)` to per-query top-k via
-    * the bounded aggregator; emits (query_id, neighbor_id, cosine, rank).
-    */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val topk = udaf(new TopKAgg(k), Encoders.product[Scored])
-    scored
-      .groupBy(col("query_id"))
-      .agg(topk(col("neighbor_id"), col("cosine")).as("top"))
-      .select(col("query_id"), posexplode(col("top.items")).as(Seq("pos", "s")))
-      .select(
-        col("query_id"),
-        col("s.neighbor_id").as("neighbor_id"),
-        round(col("s.cosine"), 6).as("cosine"),
-        (col("pos") + 1).cast("int").as("rank"))
-  }
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    TopK.perKey(scored, Seq("query_id"), ordCol = col("cosine"), tieCol = col("neighbor_id"), k)
+      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
 
   /** Exact cosine top-k for each query vector.
     * @param corpus  (idCol, vecCol) table
@@ -194,9 +160,13 @@ object Similarity {
       .withColumn("cnorm", normCol(col("cv"))) // once per corpus row, pre-explode
       .select(col("neighbor_id"), col("cv"), col("cnorm"),
         posexplode(bandKeys(col("cv"))).as(Seq("band", "bucket")))
-    // cap hot buckets on the corpus side (skew guard, same as minhashPairs)
-    val bucketSizes = c.groupBy("band", "bucket").agg(count(lit(1)).as("bn"))
-    val cPruned = c.join(bucketSizes.filter(col("bn") <= maxBucket), Seq("band", "bucket"))
+    // cap hot buckets on the corpus side (skew guard, the posting step
+    // of the dedup operators): one shuffle of the banded corpus, whose
+    // banding runs once
+    val keys = Seq(col("band"), col("bucket"))
+    val cPruned = Dedup.boundedPostings(c, keys, Seq("neighbor_id", "cv", "cnorm"), maxBucket)
+      .select(keys :+ explode(col("ms")).as("m"): _*)
+      .select(keys :+ col("m.*"): _*)
 
     val q = queries
       .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
@@ -205,8 +175,8 @@ object Similarity {
         posexplode(bandKeys(col("qv"))).as(Seq("band", "bucket")))
 
     // no dropDuplicates here: band-collision copies of a pair carry an
-    // identical deterministic cosine, and the duplicate-tolerant TopKAgg
-    // keeps one — the only exchange is the k-bounded partial aggregation
+    // identical deterministic cosine, and the top-k keeps one — the
+    // only exchange after the join is the k-bounded partial aggregation
     val scored = cPruned
       .join(q, Seq("band", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))

@@ -5,10 +5,10 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Generalized bounded per-key top-k — the schema-agnostic descendant of
-  * `Similarity.TopKAgg` (r2), generalized per the r3 verdict so relational
-  * queries (`q_events_topk`, `q_part_topk_per_brand`) stop paying for a
-  * window rank.
+/** Generalized bounded per-key top-k: the one top-k aggregation of the
+  * ANN operators (`Similarity`) and of relational queries
+  * (`q_events_topk`, `q_part_topk_per_brand`), which would otherwise pay
+  * for a window rank.
   *
   * Why not `row_number().over(Window...)`: a window rank shuffles EVERY row
   * of the group to one task and sorts it; at 100 TB a hot key means one
@@ -25,10 +25,11 @@ import org.apache.spark.sql.types._
 object TopK {
 
   /** Typed aggregator over runtime rows `(_ord: double, _tie: long, _p: struct)`.
-    * The buffer holds at most k entries sorted by (_ord asc|desc, _tie asc),
-    * so partial aggregation caps both memory and shuffle volume at k per
-    * (key, map task). `_tie` must be unique per key for a deterministic
-    * result (callers pass a row id).
+    * The buffer holds at most k distinct entries sorted by (_ord asc|desc,
+    * _tie asc), so partial aggregation caps both memory and shuffle volume
+    * at k per (key, map task). Exact duplicate rows count once (the same
+    * candidate arriving by several routes); otherwise `_tie` must be
+    * unique per key for a deterministic result (callers pass a row id).
     */
   private[ops] class RowTopKAgg(k: Int, asc: Boolean, inSchema: StructType)
       extends Aggregator[Row, Row, Row] {
@@ -39,7 +40,7 @@ object TopK {
       if (ao != bo) { if (asc) ao < bo else ao > bo }
       else a.getLong(1) < b.getLong(1)
     }
-    private def trim(xs: Seq[Row]): Seq[Row] = xs.sortWith(lt).take(k)
+    private def trim(xs: Seq[Row]): Seq[Row] = xs.distinct.sortWith(lt).take(k)
     override def zero: Row = Row(Seq.empty[Row])
     override def reduce(b: Row, a: Row): Row = {
       val items = b.getSeq[Row](0)
@@ -56,7 +57,9 @@ object TopK {
   /** Top-k rows per distinct `keyCols` combination, ordered by `ordCol`
     * (descending unless `asc`) with ties broken by `tieCol` ascending.
     * Returns all of `df`'s columns plus an int `rank` (1..k). Null order
-    * values sort last. `tieCol` must cast to long and be unique per key.
+    * values sort last. `tieCol` must cast to long and be unique per key
+    * among rows that are not exact duplicates; exact duplicate rows
+    * count once.
     */
   def perKey(
       df: DataFrame,

@@ -54,8 +54,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * strictly empty separators (everything this connector's write side and
   * [[graft.data.BioCorpus]] produce satisfies that by construction).
   *
-  * Options: `idPrefix` (doc_id = `"<prefix>-%012d" format byteOffset`,
-  * default "bio"), `maxSplitBytes` (default 128 MiB).
+  * Options: `idPrefix` (doc_id = [[BioTable.docId]], default "bio"),
+  * `maxSplitBytes` (default 128 MiB).
   */
 class BioDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "bio"
@@ -77,7 +77,17 @@ class BioDataSource extends TableProvider with DataSourceRegister {
 }
 
 object BioTable {
-  /** One row per sentence block: stable byte-offset id + parallel
+  /** A sentence block's id: `"<prefix>-<file>-<offset>"`, with `<file>`
+    * the 16-hex-digit hash of the file's name (its path relative to the
+    * directory the source reads, the same for a batch and a stream read
+    * and unchanged as other files arrive) and `<offset>` the block's
+    * 12-digit byte offset in the file. Unique across the files of a
+    * directory; ids sort by (file, offset).
+    */
+  def docId(idPrefix: String, fileName: String, offset: Long): String =
+    f"$idPrefix-${graft.core.Hashing.hashString(fileName)}%016x-$offset%012d"
+
+  /** One row per sentence block: stable (file, byte offset) id + parallel
     * char/tag arrays (the reference's in-memory shape, `utils.py:27-49`).
     */
   val Schema: StructType = StructType(Seq(
@@ -360,6 +370,7 @@ class BioPartitionReader(
     reader.initialize(split, new TaskAttemptContextImpl(conf, new TaskAttemptID()))
   }
 
+  private val fileName = new Path(partition.file).getName
   private var row: InternalRow = _
 
   override def next(): Boolean = {
@@ -369,7 +380,7 @@ class BioPartitionReader(
       val (chars, tags) = BioCorpus.parseBlock(reader.getCurrentValue.toString)
       if (chars.nonEmpty) {
         row = InternalRow.fromSeq(fields.map {
-          case "doc_id" => UTF8String.fromString(f"$idPrefix-$off%012d")
+          case "doc_id" => UTF8String.fromString(BioTable.docId(idPrefix, fileName, off))
           case "chars" => ArrayData.toArrayData(chars.map(UTF8String.fromString).toArray)
           case "tags" => ArrayData.toArrayData(tags.map(UTF8String.fromString).toArray)
           case other => throw new IllegalArgumentException(s"unknown bio column: $other")

@@ -1,9 +1,16 @@
 package graft.tables
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, NumericType, StructType}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -25,9 +32,19 @@ final class ConcurrentCommitException(msg: String, cause: Throwable)
   * {{{
   *   <root>/data/snap-<id>-<nonce>/...parquet   immutable data files per commit
   *   <root>/manifests/snap-<id>.json            snapshot manifest:
-  *       {snapshot, parent, mode, data_dir, files[], rows, tags{}, schema, ...}
+  *       {snapshot, parent, mode, data_dir, files[], file_sizes[],
+  *        file_partitions[], rows, tags{}, schema, ...}
   *   <root>/locks/snap-<id>                     exclusive claim of a snapshot id
   * }}}
+  *
+  * The manifest is the only record of a table's file layout: for each
+  * file it holds the path, the length and the hive partition values,
+  * taken once from the commit's own listing. A read builds its
+  * `FileStatus`es from the manifests ([[ManifestIndex]]) and scans every
+  * live file of a partition spec through ONE parquet relation; Spark
+  * never lists, globs or infers a table. Partition filters prune by the
+  * recorded values and data filters by the zone maps ([[mayMatch]]),
+  * both inside the scan's own file listing.
   *
   * Guarantees:
   *  - snapshot isolation: readers resolve the current snapshot once, then
@@ -84,11 +101,17 @@ object Icebergish {
     */
   case class ColStats(t: String, min: Option[Any], max: Option[Any])
 
+  /** One committed data file: its path relative to the table root, its
+    * length in bytes, and its hive partition values in the snapshot's
+    * `partitionBy` order (null = the null partition).
+    */
+  case class DataFile(path: String, size: Long, partition: Seq[String])
+
   case class Snapshot(
       id: Long,
       parent: Long, // -1 = none
       mode: String, // "append" | "overwrite" | "replace"
-      files: Seq[String],
+      dataFiles: Seq[DataFile],
       rows: Long,
       committedAt: String,
       partitionBy: Seq[String], // empty = unpartitioned
@@ -96,7 +119,9 @@ object Icebergish {
       tags: Map[String, Long], // rolled-up tag → rows
       removedFiles: Seq[String], // "replace" mode: files dropped from the parent's effective set
       fileStats: Map[String, Map[String, ColStats]], // relpath → col → bounds
-      schema: StructType) // the committed frame's
+      schema: StructType) { // the committed frame's
+    def files: Seq[String] = dataFiles.map(_.path)
+  }
 
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -202,10 +227,11 @@ object Icebergish {
       }
   }
 
-  /** Parse one manifest. Fields [[commit]] always writes are required;
-    * a missing one throws `IllegalArgumentException` naming the manifest
-    * and the field. Keys the writer omits when empty (`partition_by`,
-    * `tags`, `removed_files`, `file_stats`) read as empty.
+  /** Parse one manifest. Fields [[commit]] always writes are required
+    * (`file_partitions` whenever `partition_by` is set); a missing one
+    * throws `IllegalArgumentException` naming the manifest and the field.
+    * Keys the writer omits when empty (`partition_by`, `tags`,
+    * `removed_files`, `file_stats`) read as empty.
     */
   def readManifest(spark: SparkSession, root: String, id: Long): Snapshot = {
     manifestReadCount.incrementAndGet()
@@ -220,14 +246,22 @@ object Icebergish {
     def strings(v: Object): Seq[String] = v.asInstanceOf[java.util.List[String]].asScala.toSeq
     def entries(v: Object): Map[String, Object] =
       v.asInstanceOf[java.util.Map[String, Object]].asScala.toMap
+    val files = strings(req("files"))
+    val partitionBy = opt("partition_by").map(strings).getOrElse(Nil)
+    val partitions =
+      if (partitionBy.isEmpty) files.map(_ => Nil)
+      else req("file_partitions").asInstanceOf[java.util.List[Object]].asScala.map(strings)
+    val sizes = req("file_sizes").asInstanceOf[java.util.List[Object]].asScala.map(_.toString.toLong)
+    require(sizes.size == files.size && partitions.size == files.size,
+      s"manifest $path: file_sizes or file_partitions do not match files")
     Snapshot(
       req("snapshot").toString.toLong,
       req("parent").toString.toLong,
       req("mode").toString,
-      strings(req("files")),
+      files.lazyZip(sizes).lazyZip(partitions).map(DataFile),
       req("rows").toString.toLong,
       req("committed_at").toString,
-      opt("partition_by").map(strings).getOrElse(Nil),
+      partitionBy,
       req("data_dir").toString,
       opt("tags").map(entries(_).map { case (k, v) => k -> v.toString.toLong }).getOrElse(Map.empty),
       opt("removed_files").map(strings).getOrElse(Nil),
@@ -259,20 +293,20 @@ object Icebergish {
     * snapshot's removals (replace mode) then its additions, in commit
     * order.
     */
-  private def effectiveFiles(chain: Seq[Snapshot]): Seq[(String, Snapshot)] = {
-    val acc = mutable.LinkedHashMap.empty[String, Snapshot]
+  private def effectiveFiles(chain: Seq[Snapshot]): Seq[(DataFile, Snapshot)] = {
+    val acc = mutable.LinkedHashMap.empty[String, (DataFile, Snapshot)]
     chain.foreach { s =>
       s.removedFiles.foreach(acc.remove)
-      s.files.foreach(f => acc(f) = s)
+      s.dataFiles.foreach(d => acc(d.path) = (d, s))
     }
-    acc.toSeq
+    acc.values.toSeq
   }
 
   /** Effective file set of a snapshot: additions along the parent chain
     * (cut by an overwrite) minus replace-mode removals.
     */
   def fileSet(spark: SparkSession, root: String, id: Long): Seq[String] =
-    effectiveFiles(chainOf(spark, root, id)).map(_._1)
+    effectiveFiles(chainOf(spark, root, id)).map(_._1.path)
 
   /** Commit a DataFrame as a new snapshot. Returns the new snapshot id.
     *
@@ -287,8 +321,9 @@ object Icebergish {
     * progress in a separate file have a crash window between the data
     * commit and the progress write; [[committedTags]] closes it.
     *
-    * The manifest's `rows` is the write's own output-row count: a commit
-    * reads its files back only to gather `statsColumns` bounds.
+    * The manifest's `rows` is the write's own output-row count, and each
+    * file's length and partition values come from the commit's listing:
+    * a commit reads its files back only to gather `statsColumns` bounds.
     *
     * Concurrency: data stages under a unique nonce'd directory; the
     * manifest create (overwrite=false, atomic on HDFS/posix) is the
@@ -346,36 +381,30 @@ object Icebergish {
     // the commit never reads back the files it has just written
     val rows = GraftSqlBridge.writeParquet(df, dataDir.toString, partitionBy)
 
-    // recursive listing: partitioned layouts nest files under key=value dirs
+    // recursive listing: partitioned layouts nest files under key=value
+    // dirs, whose values are parsed here once, hive-unescaped, and
+    // recorded in the manifest with each file's length. listStatus, not
+    // listFiles(dataDir, true): listFiles builds a LocatedFileStatus per
+    // file, which loads the file's permission — on a local filesystem
+    // without the native Hadoop library, one shell command per file.
     val rootQ = f.makeQualified(new Path(root)).toString
-    // committed relpaths PLUS each file's URI-decoded absolute path — the
-    // canonical form both the listing and input_file_name() agree on
-    // (ADVICE r5, low: for paths whose characters URI-encode differently
-    // in the two renderings — spaces, %, non-ASCII roots — keying stats
-    // by Path.toString landed them under a name pruneFiles never queried,
-    // silently losing zone-map skipping for those files).
-    //
-    // listStatus, not listFiles(dataDir, true): listFiles builds a
-    // LocatedFileStatus per file, which loads the file's permission — on
-    // a local filesystem without the native Hadoop library, one shell
-    // command per file.
-    val committedDecoded = {
-      val buf = mutable.ArrayBuffer.empty[(String, String)]
-      def walk(dir: Path): Unit = f.listStatus(dir).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet"))
-          buf += ((st.getPath.toString.stripPrefix(rootQ + "/"), st.getPath.toUri.getPath))
+    val committed: Seq[DataFile] = {
+      val buf = mutable.ArrayBuffer.empty[DataFile]
+      def walk(dir: Path, partition: Seq[String]): Unit = f.listStatus(dir).foreach { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory) {
+          val v = ExternalCatalogUtils.unescapePathName(name.substring(name.indexOf('=') + 1))
+          walk(st.getPath, partition :+ (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else v))
+        } else if (name.endsWith(".parquet"))
+          buf += DataFile(st.getPath.toString.stripPrefix(rootQ + "/"), st.getLen, partition)
       }
-      walk(dataDir)
-      buf.sortBy(_._1).toSeq
+      walk(dataDir, Nil)
+      buf.sortBy(_.path).toSeq
     }
-    val committed = committedDecoded.map(_._1)
-    val decodedToRel: Map[String, String] =
-      committedDecoded.map { case (rel, dec) => dec -> rel }.toMap
     // Per-file column bounds, when requested, cost one read of the
-    // committed files. Only integral / floating / decimal / string columns
-    // are supported; others are silently skipped (pruning for them simply
-    // never fires).
+    // committed files, through the same manifest index a table read uses.
+    // Only integral / floating / decimal / string columns are supported;
+    // others are silently skipped (pruning for them simply never fires).
     val statTyped: Seq[(String, String)] =
       statsColumns.flatMap { c =>
         df.schema.fields.find(_.name == c).map(_.dataType).collect {
@@ -389,20 +418,13 @@ object Icebergish {
     val fileStats: Map[String, Map[String, ColStats]] =
       if (committed.isEmpty || statTyped.isEmpty) Map.empty
       else {
-        val paths = committed.map(p => s"$root/$p")
-        val reader =
-          if (partitionBy.nonEmpty)
-            spark.read.option("basePath", f.makeQualified(dataDir).toString)
-          else spark.read
-        // the frame's own schema: no footer-inference job
-        val base = reader.schema(df.schema).parquet(paths: _*)
-        import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+        import org.apache.spark.sql.functions.{input_file_name, max, min}
         val aggs = statTyped.flatMap { case (c, _) =>
           Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))
         }
         // per-file aggregate: bounded by the commit's file count
-        val perFile = base.groupBy(input_file_name().as("__file"))
-          .agg(aggs.head, aggs.tail: _*)
+        val perFile = scan(spark, new Path(rootQ), df.schema, partitionBy, committed.map(_ -> Map.empty))
+          .groupBy(input_file_name().as("__file")).agg(aggs.head, aggs.tail: _*)
           .collect()
         def norm(t: String, v: Any): Option[Any] = Option(v).map {
           case n: java.lang.Number if t == "i" => java.lang.Long.valueOf(n.longValue())
@@ -411,21 +433,14 @@ object Icebergish {
           case d: scala.math.BigDecimal => d.bigDecimal.toPlainString
           case s => s.toString
         }
-        perFile.map { r =>
-          // match to the committed listing through the URI-DECODED path
-          // (input_file_name() returns a URI-encoded string, the
-          // listing holds raw characters — decoding both is the one
-          // rendering they must agree on); fall back to the legacy
-          // Path.toString keying if the string is not a parsable URI
-          // (conservative: worst case the file is kept, never skipped)
-          val raw = r.getAs[String]("__file")
-          val rel = (try Option(new java.net.URI(raw).getPath)
-          catch { case _: Exception => None })
-            .flatMap(decodedToRel.get)
-            .getOrElse(new Path(raw).toString.stripPrefix(rootQ + "/"))
-          rel -> statTyped.map { case (c, t) =>
-            c -> ColStats(t, norm(t, r.getAs[Any](s"__min_$c")), norm(t, r.getAs[Any](s"__max_$c")))
-          }.toMap
+        // input_file_name() is the URI-encoded path; matched through the
+        // URI-DECODED path, the one rendering it and the listing agree on
+        // for paths with spaces, '%' or non-ASCII characters
+        val decodedToRel = committed.map(d => new Path(rootQ, d.path).toUri.getPath -> d.path).toMap
+        perFile.flatMap { r =>
+          decodedToRel.get(new java.net.URI(r.getAs[String]("__file")).getPath).map(_ -> statTyped.map {
+            case (c, t) => c -> ColStats(t, norm(t, r.getAs[Any](s"__min_$c")), norm(t, r.getAs[Any](s"__max_$c")))
+          }.toMap)
         }.toMap
       }
 
@@ -441,7 +456,9 @@ object Icebergish {
     manifest.put("parent", java.lang.Long.valueOf(parent))
     manifest.put("mode", mode)
     manifest.put("data_dir", dataDirRel)
-    manifest.put("files", committed.toList.asJava)
+    manifest.put("files", committed.map(_.path).asJava)
+    manifest.put("file_sizes", committed.map(d => java.lang.Long.valueOf(d.size)).asJava)
+    if (partitionBy.nonEmpty) manifest.put("file_partitions", committed.map(_.partition.asJava).asJava)
     manifest.put("rows", java.lang.Long.valueOf(rows))
     manifest.put("committed_at", java.time.Instant.now().toString)
     if (partitionBy.nonEmpty) manifest.put("partition_by", partitionBy.toList.asJava)
@@ -508,91 +525,130 @@ object Icebergish {
     id
   }
 
-  /** Read the table at the current snapshot (or a past one: time travel).
-    *
-    * Partitioned snapshots are read with their own `basePath` so the
-    * hive partition columns are recovered; snapshots in the chain may mix
-    * partition specs (e.g. a legacy unpartitioned append followed by
-    * partitioned ones) — they are aligned with `unionByName`.
+  private def resolve(spark: SparkSession, root: String, snapshot: Option[Long]): Long =
+    snapshot.orElse(currentSnapshotId(spark, root)).getOrElse(sys.error(s"no current snapshot in $root"))
+
+  /** Read the table at the current snapshot (or a past one: time travel)
+    * as one scan of its live files per partition spec in the chain; a
+    * chain that mixes specs (e.g. a legacy unpartitioned append followed
+    * by partitioned ones) aligns its scans with `unionByName`. A filter
+    * on the result prunes partitions and zone-mapped files in the scan.
     */
-  def read(spark: SparkSession, root: String, snapshot: Option[Long] = None): DataFrame = {
-    val id = snapshot
-      .orElse(currentSnapshotId(spark, root))
-      .getOrElse(sys.error(s"no current snapshot in $root"))
-    readFileGroups(spark, root, effectiveFiles(chainOf(spark, root, id)))
-      .getOrElse(spark.emptyDataFrame)
+  def read(spark: SparkSession, root: String, snapshot: Option[Long] = None): DataFrame =
+    readChain(spark, root, chainOf(spark, root, resolve(spark, root, snapshot)))
+
+  private def readChain(spark: SparkSession, root: String, chain: Seq[Snapshot]): DataFrame = {
+    val live = effectiveFiles(chain)
+    val rootQ = fs(spark, root).makeQualified(new Path(root))
+    chain.map(_.partitionBy).distinct.map { spec =>
+      val snaps = chain.filter(_.partitionBy == spec)
+      // schema evolution: the union of the snapshots' schemas, so a column
+      // added later reads as null for the files written before it
+      val schema = StructType(snaps.flatMap(_.schema.fields).distinctBy(_.name))
+      scan(spark, rootQ, schema, spec, live.collect {
+        case (d, s) if s.partitionBy == spec => d -> s.fileStats.getOrElse(d.path, Map.empty)
+      })
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Build the DataFrame over a (file, owning-snapshot) set — the ONE
-    * reader-construction path shared by [[read]] and [[readPruned]]
-    * (grouped by snapshot so each group reads with its own basePath;
-    * groups aligned with `unionByName(allowMissingColumns)` for schema
-    * evolution). None = no files.
+  /** One parquet relation over `files` (each with its zone maps) through a
+    * [[ManifestIndex]]: no listing, no footer-inference job.
     */
-  private def readFileGroups(
+  private def scan(
       spark: SparkSession,
-      root: String,
-      files: Seq[(String, Snapshot)]): Option[DataFrame] = {
-    val bySnap = files.groupBy(_._2).toSeq.sortBy(_._1.id)
-    val parts = bySnap.collect { case (s, fsOfSnap) if fsOfSnap.nonEmpty =>
-      val paths = fsOfSnap.map(_._1).map(p => s"$root/$p")
-      val f = fs(spark, root)
-      val reader =
-        if (s.partitionBy.nonEmpty)
-          spark.read.option("basePath", f.makeQualified(new Path(root, s.dataDir)).toString)
-        else spark.read
-      // the recorded schema spares a footer-inference job per snapshot
-      reader.schema(s.schema).parquet(paths: _*)
+      rootQ: Path,
+      schema: StructType,
+      partitionBy: Seq[String],
+      files: Seq[(DataFile, Map[String, ColStats])]): DataFrame = {
+    val fields = schema.fields.toSeq.map(_.copy(nullable = true))
+    val partSchema = StructType(partitionBy.map(c => fields.find(_.name == c).get))
+    val index = new ManifestIndex(rootQ, files, partSchema, spark.conf.get("spark.sql.session.timeZone"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      StructType(fields.filterNot(f => partitionBy.contains(f.name))), None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The file index of one scan, built from manifest records with no
+    * filesystem call. [[listFiles]] keeps the partitions whose recorded
+    * values pass the partition filters and, within them, the files whose
+    * zone maps do not refute the data filters ([[keeps]]).
+    */
+  private[graft] final class ManifestIndex(
+      root: Path,
+      files: Seq[(DataFile, Map[String, ColStats])],
+      override val partitionSchema: StructType,
+      timeZone: String) extends FileIndex {
+    private val parts: Seq[(InternalRow, Seq[(FileStatus, Map[String, ColStats])])] = {
+      val byPart = files.groupBy(_._1.partition)
+      files.map(_._1.partition).distinct.map { vals =>
+        InternalRow.fromSeq(partitionSchema.zip(vals).map { case (field, v) =>
+          Cast(Literal(v), field.dataType, Some(timeZone)).eval()
+        }) -> byPart(vals).map { case (d, st) => new FileStatus(d.size, false, 0, 0, 0, new Path(root, d.path)) -> st }
+      }
     }
-    // allowMissingColumns: schema evolution — a snapshot written before a
-    // column was added reads as null for that column
-    parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
+
+    override def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val inPartition = partitionFilters.reduceOption(And).map(f => Predicate.createInterpreted(f.transform {
+        case a: AttributeReference => BoundReference(partitionSchema.fieldIndex(a.name), a.dataType, nullable = true)
+      }))
+      parts.collect { case (values, fs) if inPartition.forall(_.eval(values)) =>
+        PartitionDirectory(values, fs.collect { case (st, stats) if keeps(dataFilters, stats) => st }.toArray)
+      }
+    }
+
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def inputFiles: Array[String] = parts.flatMap(_._2.map(_._1.getPath.toString)).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_._1.size).sum
   }
 
   /** Split the snapshot's effective file set by the manifest zone maps:
     * `(kept, skipped)`. A file is skipped only when its recorded bounds
     * PROVE no row can satisfy `predicate`; files without stats (or with
     * stats the evaluator cannot reason about) are conservatively kept.
-    * Evaluation happens on the DRIVER over manifest metadata — Spark
-    * never lists, opens, or schedules a skipped file.
+    * The predicate is judged in the form the scan of
+    * `read(...).filter(predicate)` judges it (analyzed and optimized
+    * against the table), by the same [[keeps]]: that scan reads exactly
+    * the files kept here that its partition filters do not drop.
     */
   def pruneFiles(
       spark: SparkSession,
       root: String,
-      predicate: org.apache.spark.sql.Column,
+      predicate: Column,
       snapshot: Option[Long] = None): (Seq[(String, Snapshot)], Seq[String]) = {
-    val id = snapshot
-      .orElse(currentSnapshotId(spark, root))
-      .getOrElse(sys.error(s"no current snapshot in $root"))
-    val eff = effectiveFiles(chainOf(spark, root, id))
-    val node = org.apache.spark.sql.GraftSqlBridge.predicateTree(predicate)
-    val (kept, skipped) = eff.partition { case (file, snap) =>
-      snap.fileStats.get(file) match {
-        case Some(stats) => mayMatch(node, stats)
-        case None => true
-      }
+    val chain = chainOf(spark, root, resolve(spark, root, snapshot))
+    val filters = readChain(spark, root, chain).where(predicate).queryExecution.optimizedPlan
+      .collectFirst { case Filter(c, _) => c }.toSeq
+    val (kept, skipped) = effectiveFiles(chain).partition { case (d, s) =>
+      keeps(filters, s.fileStats.getOrElse(d.path, Map.empty))
     }
-    (kept, skipped.map(_._1))
+    (kept.map { case (d, s) => d.path -> s }, skipped.map(_._1.path))
   }
+
+  /** May a file with these column bounds hold a row passing every filter? */
+  private def keeps(filters: Seq[Expression], stats: Map[String, ColStats]): Boolean =
+    stats.isEmpty || filters.forall(mayMatch(_, stats))
 
   /** Conservative zone-map evaluator: may the predicate match ANY row of
     * a file with these column bounds? Unknown shapes return true. The
     * comparison algebra mirrors Iceberg's InclusiveMetricsEvaluator:
     * And/Or recurse (Not is NOT pushed through — a `true` from a child
     * means "maybe", and !maybe is not "never"); a binary comparison
-    * between a stats column and a foldable literal tests the interval.
+    * between a stats column (bare, or under a widening numeric cast) and
+    * a non-null literal tests the interval.
     */
-  private[graft] def mayMatch(
-      e: org.apache.spark.sql.GraftSqlBridge.PredTree,
-      stats: Map[String, ColStats]): Boolean = {
-    import org.apache.spark.sql.GraftSqlBridge.PredTree
-    def colName(x: PredTree): Option[String] = x match {
-      case PredTree.Attr(n) => Some(n)
-      case _ => None
+  private[graft] def mayMatch(e: Expression, stats: Map[String, ColStats]): Boolean = {
+    object StatCol {
+      def unapply(x: Expression): Option[String] = x match {
+        case a: Attribute => Some(a.name)
+        case Cast(a: Attribute, to: NumericType, _, _) if Cast.canUpCast(a.dataType, to) => Some(a.name)
+        case _ => None
+      }
     }
-    def litVal(x: PredTree): Option[Any] = x match {
-      case PredTree.Lit(v) if v != null => Some(v)
-      case _ => None
+    object Lit {
+      def unapply(x: Expression): Option[Any] = x match {
+        case Literal(v, _) if v != null => Some(v)
+        case _ => None
+      }
     }
     // compare a stats bound against a predicate literal in the column's
     // value family; None = incomparable (→ conservative keep)
@@ -607,7 +663,6 @@ object Icebergish {
             }
             val l = lit match {
               case n: java.lang.Number => new java.math.BigDecimal(n.toString)
-              case d: scala.math.BigDecimal => d.bigDecimal
               case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
               case _ => return None
             }
@@ -646,36 +701,26 @@ object Icebergish {
         // file is known non-empty is minCount meaningful; be conservative
         case _ => true
       }
-    def binary(l: PredTree, r: PredTree, op: String, flipped: String): Boolean =
-      (colName(l), litVal(r), colName(r), litVal(l)) match {
-        case (Some(n), Some(v), _, _) => test(n, v, op)
-        case (_, _, Some(n), Some(v)) => test(n, v, flipped)
+    def binary(l: Expression, r: Expression, op: String, flipped: String): Boolean = (l, r) match {
+      case (StatCol(n), Lit(v)) => test(n, v, op)
+      case (Lit(v), StatCol(n)) => test(n, v, flipped)
+      case _ => true
+    }
+    e match {
+      case And(l, r) => mayMatch(l, stats) && mayMatch(r, stats)
+      case Or(l, r) => mayMatch(l, stats) || mayMatch(r, stats)
+      case EqualTo(l, r) => binary(l, r, "=", "=")
+      case LessThan(l, r) => binary(l, r, "<", ">")
+      case LessThanOrEqual(l, r) => binary(l, r, "<=", ">=")
+      case GreaterThan(l, r) => binary(l, r, ">", "<")
+      case GreaterThanOrEqual(l, r) => binary(l, r, ">=", "<=")
+      // col IN (v1, v2, ...) = OR of equalities over the bounds; a
+      // non-literal member cannot refute
+      case In(StatCol(n), values) => values.exists {
+        case Lit(v) => test(n, v, "=")
         case _ => true
       }
-    // the Column DSL builds function nodes named like SQL operators
-    // ("and", ">=", "=", ...)
-    e match {
-      case PredTree.Fn(name, args) =>
-        (name.toLowerCase, args) match {
-          case ("and", Seq(l, r)) => mayMatch(l, stats) && mayMatch(r, stats)
-          case ("or", Seq(l, r)) => mayMatch(l, stats) || mayMatch(r, stats)
-          case ("=" | "==" | "equal_to", Seq(l, r)) => binary(l, r, "=", "=")
-          case ("<", Seq(l, r)) => binary(l, r, "<", ">")
-          case ("<=", Seq(l, r)) => binary(l, r, "<=", ">=")
-          case (">", Seq(l, r)) => binary(l, r, ">", "<")
-          case (">=", Seq(l, r)) => binary(l, r, ">=", "<=")
-          // col IN (v1, v2, ...) = OR of equalities over the bounds
-          case ("in", col +: values) if values.nonEmpty =>
-            colName(col) match {
-              case Some(n) =>
-                values.exists(v => litVal(v) match {
-                  case Some(lit) => test(n, lit, "=")
-                  case None => true // non-literal member → can't refute
-                })
-              case None => true
-            }
-          case _ => true
-        }
+      case InSet(StatCol(n), values) => values.exists(v => v == null || test(n, v, "="))
       case _ => true
     }
   }
@@ -687,25 +732,6 @@ object Icebergish {
   private[graft] def utf8Compare(a: String, b: String): Int =
     org.apache.spark.unsafe.types.UTF8String.fromString(a)
       .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-
-  /** [[read]] + manifest data skipping: semantically identical to
-    * `read(spark, root, snapshot).filter(predicate)`, but files whose
-    * zone maps refute the predicate never reach the scan at all — the
-    * biggest 100 TB read lever after partition pruning (a time-range
-    * query over a chronologically-appended table touches only the
-    * matching commits' files). Statistics come from commits made with
-    * `statsColumns`; stat-less files degrade gracefully to scan+filter.
-    */
-  def readPruned(
-      spark: SparkSession,
-      root: String,
-      predicate: org.apache.spark.sql.Column,
-      snapshot: Option[Long] = None): DataFrame = {
-    val (kept, _) = pruneFiles(spark, root, predicate, snapshot)
-    readFileGroups(spark, root, kept)
-      .getOrElse(read(spark, root, snapshot).limit(0)) // keep the schema
-      .filter(predicate)
-  }
 
   def exists(spark: SparkSession, root: String): Boolean =
     currentSnapshotId(spark, root).isDefined
@@ -731,7 +757,8 @@ object Icebergish {
     *
     * Mechanics: the affected partition values (bounded — partition
     * columns are low-cardinality by design) select the current files to
-    * drop; the merged rows (current-of-affected anti-join df on the keys,
+    * drop by the values their manifests record (the null partition
+    * included); the merged rows (current-of-affected anti-join df on the keys,
     * union df) commit via [[commitReplace]] in one atomic snapshot. Time
     * travel to pre-upsert snapshots is intact (removed files stay on
     * disk, still referenced by their adding manifests).
@@ -752,12 +779,6 @@ object Icebergish {
       keyCols: Seq[String]): Long = {
     require(partitionBy.nonEmpty && keyCols.nonEmpty)
     val spark = df.sparkSession
-    import org.apache.spark.sql.functions.col
-    // __HIVE_DEFAULT_PARTITION__ (null partition values) is out of the
-    // path-matching contract — refuse loudly instead of leaving stale
-    // duplicates behind
-    require(df.filter(partitionBy.map(c => col(c).isNull).reduce(_ || _)).isEmpty,
-      "upsertPartitions requires non-null partition values")
     val cur = currentSnapshotId(spark, root)
     if (cur.isEmpty) return commit(df, root, "append", partitionBy)
     // PIN the whole operation to this base snapshot: removed files,
@@ -776,26 +797,23 @@ object Icebergish {
       return commitWithParent(merged, root, "overwrite", partitionBy, None, Some(base))
     }
 
-    val affected: Seq[Seq[String]] = df.select(partitionBy.map(col): _*).distinct()
-      .collect().map(r => partitionBy.indices.map(i => String.valueOf(r.get(i))).toSeq).toSeq
-    // hive escaping (spaces, slashes, '=') via Spark's own rule, so the
-    // path-segment match agrees with what partitionBy-writes produce
-    val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-    val affectedSegs = affected.map(vals =>
-      partitionBy.zip(vals).map { case (c, v) => s"$c=${esc(v)}" }.toSet)
-    val removed = eff.map(_._1).filter { f =>
-      val segs = f.split("/").toSet
-      affectedSegs.exists(_.subsetOf(segs))
-    }
-    val partFilter = affected
-      .map(vals => partitionBy.zip(vals).map { case (c, v) => col(c) === v }.reduce(_ && _))
-      .reduceOption(_ || _)
-      .getOrElse(org.apache.spark.sql.functions.lit(false))
-    val merged = read(spark, root, Some(base)).where(partFilter)
+    // the affected partitions in the rendering the manifest records
+    // (Spark's own cast to string, null = the null partition)
+    val affected: Set[Seq[String]] = df.select(partitionBy.map(col(_).cast("string")): _*).distinct()
+      .collect().map(r => partitionBy.indices.map(r.getString)).toSet
+    val removed = eff.collect { case (d, _) if affected(d.partition) => d.path }
+    val merged = read(spark, root, Some(base)).where(inPartitions(partitionBy, affected.toSeq))
       .join(df.select(keyCols.map(col): _*), keyCols, "left_anti")
       .unionByName(df)
     commitWithParent(merged, root, "replace", partitionBy, None, Some(base), removed)
   }
+
+  /** Rows whose `partitionBy` values equal one of the recorded partition
+    * value lists (strings; null = the null partition).
+    */
+  private def inPartitions(partitionBy: Seq[String], values: Seq[Seq[String]]): Column =
+    values.map(vs => partitionBy.zip(vs).map { case (c, v) => col(c) <=> v }.reduce(_ && _))
+      .reduceOption(_ || _).getOrElse(lit(false))
 
   /** Remove crashed writers' garbage: data directories referenced by NO
     * manifest (a writer that died before its manifest-create commit point
@@ -896,28 +914,17 @@ object Icebergish {
       root: String,
       partitionBy: Seq[String],
       maxFilesPerPartition: Int = 4): Long = {
-    import org.apache.spark.sql.functions.col
-    val cur = currentSnapshotId(spark, root).getOrElse(sys.error(s"no current snapshot in $root"))
+    val cur = resolve(spark, root, None)
     val eff = effectiveFiles(chainOf(spark, root, cur))
     if (!eff.forall(_._2.partitionBy == partitionBy))
       return compact(spark, root, partitionBy)
-    def partKey(f: String): Seq[String] =
-      f.split("/").toSeq.filter(seg => partitionBy.exists(c => seg.startsWith(c + "=")))
-    val byPart = eff.map(_._1).groupBy(partKey)
-    val toCompact = byPart.filter(_._2.size > maxFilesPerPartition)
+    val toCompact = eff.groupBy(_._1.partition).filter(_._2.size > maxFilesPerPartition)
     if (toCompact.isEmpty) return cur
-    val removed = toCompact.values.flatten.toSeq
-    val filter = toCompact.keys
-      .map(_.map { seg =>
-        val Array(c, v) = seg.split("=", 2)
-        // segments carry hive-ESCAPED values; compare against the real one
-        col(c) === org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
-      }.reduce(_ && _))
-      .reduce(_ || _)
+    val removed = toCompact.values.flatten.map(_._1.path).toSeq
     // pinned to `cur` like upsertPartitions: a concurrent commit between
     // the file census and this commit collides on cur+1's claim and
     // raises ConcurrentCommitException instead of duplicating its rows
-    val rows = read(spark, root, Some(cur)).where(filter)
+    val rows = read(spark, root, Some(cur)).where(inPartitions(partitionBy, toCompact.keys.toSeq))
       .repartition(toCompact.size, partitionBy.map(col): _*)
     commitWithParent(rows, root, "replace", partitionBy, None, Some(cur), removed)
   }

@@ -74,31 +74,6 @@ object GraftSqlBridge {
     SparkSession.getActiveSession.map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  /** Neutral view of a predicate Column's node tree for metadata-level
-    * evaluation (zone-map pruning): function applications, attribute
-    * references, literals; anything else collapses to [[PredTree.Opaque]].
-    * `ColumnNode` itself is `private[sql]`, hence this bridge.
-    */
-  sealed trait PredTree
-  object PredTree {
-    case class Fn(name: String, args: Seq[PredTree]) extends PredTree
-    case class Attr(name: String) extends PredTree
-    case class Lit(value: Any) extends PredTree
-    case object Opaque extends PredTree
-  }
-
-  def predicateTree(c: Column): PredTree = {
-    import org.apache.spark.sql.internal._
-    def conv(n: ColumnNode): PredTree = n match {
-      case f: UnresolvedFunction => PredTree.Fn(f.functionName, f.arguments.map(conv))
-      case a: UnresolvedAttribute =>
-        a.nameParts.lastOption.map(PredTree.Attr).getOrElse(PredTree.Opaque)
-      case l: Literal => PredTree.Lit(l.value)
-      case _ => PredTree.Opaque
-    }
-    conv(c.node)
-  }
-
   private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   /** Write `df` as parquet under `path` (error if it exists), hive-style

@@ -41,11 +41,13 @@ class BioSourceSpec extends AnyFunSuite {
       .toSeq.sortBy(_._1)
 
   /** The blank-line framing replicated on the driver: the file's bytes
-    * split at each `"\n\n"`, every block keyed by the byte offset it
-    * starts at and parsed with `parseBlock`; blocks with no pair dropped.
+    * split at each `"\n\n"`, every block keyed by the hash of the file's
+    * name and the byte offset it starts at, and parsed with `parseBlock`;
+    * blocks with no pair dropped.
     */
   private def replica(path: String) = {
     val bytes = Files.readAllBytes(Paths.get(path))
+    val file = graft.core.Hashing.hashString(Paths.get(path).getFileName.toString)
     val rows = Seq.newBuilder[(String, Seq[String], Seq[String])]
     var start = 0
     while (start < bytes.length) {
@@ -54,7 +56,7 @@ class BioSourceSpec extends AnyFunSuite {
         end += 1
       val (chars, tags) =
         BioCorpus.parseBlock(new String(bytes, start, end - start, StandardCharsets.UTF_8))
-      if (chars.nonEmpty) rows += ((f"bio-$start%012d", chars, tags))
+      if (chars.nonEmpty) rows += ((f"bio-$file%016x-$start%012d", chars, tags))
       start = end + 2
     }
     rows.result().sortBy(_._1)
@@ -118,6 +120,26 @@ class BioSourceSpec extends AnyFunSuite {
       .select("chars", "tags").collect()
       .map(r => (r.getSeq[String](0), r.getSeq[String](1))).toSeq
     assert(back.sortBy(_._1.mkString) == sentences.sortBy(_._1.mkString))
+  }
+
+  test("ids are unique across the files of a directory, in batch and stream reads alike") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("bio_src_ids").toString
+    // one sentence per part file: each sits at byte offset 0 of its file
+    Seq((Seq("患"), Seq("B-Diseases")), (Seq("头"), Seq("B-Anatomical")), (Seq("血"), Seq("B-Laboratory")))
+      .toDF("chars", "tags").repartition(3)
+      .write.format("bio").mode("overwrite").save(dir)
+    assert(new java.io.File(dir).list().count(_.startsWith("part-")) == 3)
+    val batch = spark.read.format("bio").load(dir).select("doc_id").as[String].collect().toSet
+    assert(batch.size == 3, s"ids collide across files: $batch")
+    val q = spark.readStream.format("bio").load(dir).select("doc_id")
+      .writeStream.format("memory").queryName("bio_stream_ids")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination(60000) finally q.stop()
+    assert(spark.table("bio_stream_ids").as[String].collect().toSet == batch)
+    // positions follow (file, offset): three files, three positions
+    assert(BioCorpus.readIndexed(spark, dir).map(_.doc_id).collect().toSeq ==
+      Seq("s000000000", "s000000001", "s000000002"))
   }
 
   test("write path: overwrite truncates, append accumulates across jobs") {

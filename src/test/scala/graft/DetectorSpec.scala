@@ -155,7 +155,7 @@ class DetectorSpec extends AnyFunSuite {
     } {
       val kernel = new Detector.Kernel(gaz, 128, trans, feats)
       sentences.foreach { s =>
-        val want = Detector.detectReference(s, gaz, 128, trans, feats)
+        val want = Detector.detectOne(s, gaz, 128, trans, feats)
         val got = kernel.detect(s)
         assert(bits(got) == bits(want), s"$tName/$fName on '${s.text}': kernel $got, reference $want")
       }

@@ -136,7 +136,7 @@ class IcebergCommitSpec extends AnyFunSuite {
 
   test("a manifest without a field the reader needs fails loudly, naming the manifest and the field") {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    Seq("data_dir", "schema", "snapshot").foreach { field =>
+    Seq("data_dir", "schema", "snapshot", "file_sizes", "file_partitions").foreach { field =>
       val root = tmpRoot()
       Icebergish.commit(triples(10), root, "append", Seq("pred"))
       val path = java.nio.file.Paths.get(root, "manifests", "snap-0.json")

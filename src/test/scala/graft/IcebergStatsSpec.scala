@@ -6,15 +6,21 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** File-level column statistics + manifest data skipping (r4 VERDICT
   * next-step #3): commits record per-file min/max zone maps for chosen
-  * columns; [[Icebergish.readPruned]] refutes files on the driver before
-  * Spark ever schedules them, with conservative keep everywhere the
-  * bounds cannot prove absence.
+  * columns; a filtered [[Icebergish.read]] refutes files on the driver,
+  * in the scan's own file listing, before Spark ever schedules them,
+  * with conservative keep everywhere the bounds cannot prove absence.
   */
 class IcebergStatsSpec extends AnyFunSuite {
   lazy val spark = SparkTest.spark
 
   private def tmpRoot(): String =
     java.nio.file.Files.createTempDirectory("iceb_stats").toString
+
+  /** The table filtered after a full scan: no file pruning applies to a
+    * local checkpoint, so this is the answer pruning must reproduce.
+    */
+  private def scanned(root: String, pred: org.apache.spark.sql.Column) =
+    Icebergish.read(spark, root).localCheckpoint().filter(pred)
 
   private def commitRange(root: String, lo: Int, hi: Int, parts: Int = 2): Long = {
     import spark.implicits._
@@ -36,9 +42,9 @@ class IcebergStatsSpec extends AnyFunSuite {
     // 200-300 may straddle 250 per file split, 300-400 fully kept
     assert(skipped.size >= 4, s"expected >=4 skipped files, got ${skipped.size}: $skipped")
 
-    val viaPrune = Icebergish.readPruned(spark, root, col("k") >= 250L)
+    val viaPrune = Icebergish.read(spark, root).filter(col("k") >= 250L)
       .select("k").as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().sorted
-    val viaScan = Icebergish.read(spark, root).filter(col("k") >= 250L)
+    val viaScan = scanned(root, col("k") >= 250L)
       .select("k").as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().sorted
     assert(viaPrune.toSeq == viaScan.toSeq)
     assert(viaPrune.length == 150)
@@ -52,8 +58,8 @@ class IcebergStatsSpec extends AnyFunSuite {
     def check(pred: org.apache.spark.sql.Column, expectSkip: Boolean): Unit = {
       val (_, skipped) = Icebergish.pruneFiles(spark, root, pred)
       assert(skipped.nonEmpty == expectSkip, s"pred=$pred skipped=$skipped")
-      val a = Icebergish.readPruned(spark, root, pred).count()
-      val b = Icebergish.read(spark, root).filter(pred).count()
+      val a = Icebergish.read(spark, root).filter(pred).count()
+      val b = scanned(root, pred).count()
       assert(a == b, s"pred=$pred pruned=$a scanned=$b")
     }
     check(col("k") === 150L, expectSkip = true)
@@ -64,7 +70,7 @@ class IcebergStatsSpec extends AnyFunSuite {
     // OR keeps a file if EITHER side may match
     check(col("k") < 50L || col("k") >= 150L, expectSkip = false)
     check(col("k") === 9999L, expectSkip = true) // out of all ranges: everything skipped
-    assert(Icebergish.readPruned(spark, root, col("k") === 9999L).count() == 0L)
+    assert(Icebergish.read(spark, root).filter(col("k") === 9999L).count() == 0L)
   }
 
   test("conservative keeps: stat-less commits, unknown columns, unsupported shapes") {
@@ -79,18 +85,18 @@ class IcebergStatsSpec extends AnyFunSuite {
     val (kept, skipped) = Icebergish.pruneFiles(spark, root, col("k") >= 400L)
     assert(kept.nonEmpty, "stat-less files must survive pruning")
     assert(skipped.size == 2, s"the stats-bearing commit's files should skip: $skipped")
-    assert(Icebergish.readPruned(spark, root, col("k") >= 400L).count() == 10L)
+    assert(Icebergish.read(spark, root).filter(col("k") >= 400L).count() == 10L)
 
     // unknown column / non-comparison predicate → no pruning, same answer
     val p2 = length(col("name")) > 3 // function shape: evaluator must keep all
     assert(Icebergish.pruneFiles(spark, root, p2)._2.isEmpty)
-    assert(Icebergish.readPruned(spark, root, p2).count() ==
-      Icebergish.read(spark, root).filter(p2).count())
+    assert(Icebergish.read(spark, root).filter(p2).count() ==
+      scanned(root, p2).count())
     // NOT is not pushed through (conservative)
     val p3 = !(col("k") < 50L)
     assert(Icebergish.pruneFiles(spark, root, p3)._2.isEmpty)
-    assert(Icebergish.readPruned(spark, root, p3).count() ==
-      Icebergish.read(spark, root).filter(p3).count())
+    assert(Icebergish.read(spark, root).filter(p3).count() ==
+      scanned(root, p3).count())
   }
 
   test("all-null stat column never prunes; replace-mode removals respected") {
@@ -101,7 +107,7 @@ class IcebergStatsSpec extends AnyFunSuite {
     Icebergish.commit(df, root, statsColumns = Seq("k"))
     // bounds are absent for the all-null column → file kept, filter applies
     assert(Icebergish.pruneFiles(spark, root, col("k") > 0L)._2.isEmpty)
-    assert(Icebergish.readPruned(spark, root, col("k") > 0L).count() == 0L)
+    assert(Icebergish.read(spark, root).filter(col("k") > 0L).count() == 0L)
   }
 
   test("IN predicates prune as an OR of equalities over the bounds") {
@@ -110,8 +116,8 @@ class IcebergStatsSpec extends AnyFunSuite {
     commitRange(root, 100, 200)
     commitRange(root, 200, 300)
     def check(pred: org.apache.spark.sql.Column): Unit = {
-      val a = Icebergish.readPruned(spark, root, pred).count()
-      val b = Icebergish.read(spark, root).filter(pred).count()
+      val a = Icebergish.read(spark, root).filter(pred).count()
+      val b = scanned(root, pred).count()
       assert(a == b, s"pred=$pred pruned=$a scanned=$b")
     }
     // members in two of three commits: the third refutes and skips
@@ -120,7 +126,7 @@ class IcebergStatsSpec extends AnyFunSuite {
     check(p1)
     // no member in any range: everything skips
     val p2 = col("k").isin(900L, 950L)
-    assert(Icebergish.readPruned(spark, root, p2).count() == 0L)
+    assert(Icebergish.read(spark, root).filter(p2).count() == 0L)
     assert(Icebergish.pruneFiles(spark, root, p2)._1.isEmpty, "all files should refute")
     // combined with a comparison
     check(col("k").isin(50L, 150L, 250L) && col("k") >= 100L)
@@ -138,9 +144,9 @@ class IcebergStatsSpec extends AnyFunSuite {
       root, statsColumns = Seq("s"))
     assert(Icebergish.pruneFiles(spark, root, col("s") === "￿")._2.isEmpty,
       "file containing a matching row was pruned (UTF-16 comparison bug)")
-    assert(Icebergish.readPruned(spark, root, col("s") === "￿").count() == 1L)
+    assert(Icebergish.read(spark, root).filter(col("s") === "￿").count() == 1L)
     // and genuine refutation still works above the true (binary) max
-    assert(Icebergish.readPruned(spark, root, col("s") > smiley).count() == 0L)
+    assert(Icebergish.read(spark, root).filter(col("s") > smiley).count() == 0L)
     assert(Icebergish.pruneFiles(spark, root, col("s") > smiley)._2.nonEmpty)
   }
 
@@ -174,10 +180,10 @@ class IcebergStatsSpec extends AnyFunSuite {
     val root = tmpRoot()
     val s1 = commitRange(root, 0, 100)
     commitRange(root, 100, 200)
-    val atS1 = Icebergish.readPruned(spark, root, col("k") >= 50L, snapshot = Some(s1))
+    val atS1 = Icebergish.read(spark, root, Some(s1)).filter(col("k") >= 50L)
     assert(atS1.count() == 50L)
     val (_, skippedAtS1) = Icebergish.pruneFiles(spark, root, col("k") >= 100L, Some(s1))
-    assert(Icebergish.readPruned(spark, root, col("k") >= 100L, Some(s1)).count() == 0L)
+    assert(Icebergish.read(spark, root, Some(s1)).filter(col("k") >= 100L).count() == 0L)
     assert(skippedAtS1.size == 2, "both of snapshot 1's files refute k>=100")
   }
 }

@@ -89,7 +89,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("ANN top-k ranks via bounded partial aggregation, not a window") {
     // a Window rank shuffles and sorts EVERY scored row (|corpus|×|queries|);
-    // the bounded TopKAgg caps the shuffle at k per (query, map task)
+    // the bounded per-key top-k caps the shuffle at k per (query, map task)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = e.filter(org.apache.spark.sql.functions.col("vec_id") < 5)
     val brute = graft.ops.Similarity.bruteForceTopK(e, q, "vec_id", "embedding", 5)
@@ -240,9 +240,13 @@ class PlanSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q_docs_table_prune")(spark, sf)
     // the four range-commits wrote >= 4 files; the predicate keeps only
     // the top ~40% of the doc_id domain, so the SCAN's input files must
-    // be a strict subset (skipping happens at planning, before Spark
-    // lists the files — inputFiles is the ground truth)
-    val scanned = df.inputFiles.length
+    // be a strict subset (skipping happens in the scan's file listing,
+    // on the driver — the scan's numFiles metric is the ground truth)
+    df.collect()
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1, s"one table scan expected, got ${scans.size}")
+    val scanned = scans.head.metrics("numFiles").value
     assert(scanned >= 1 && scanned <= 2,
       s"expected 1-2 surviving files after zone-map pruning, scan reads $scanned")
   }

@@ -145,6 +145,28 @@ class Round3Spec extends AnyFunSuite {
     assert(Icebergish.read(spark, root).count() == 3)
   }
 
+  test("upsert and partition compaction select the null partition by its recorded value") {
+    import spark.implicits._
+    val root = tmpDir("iceberg_null_part")
+    (0 until 2).foreach { i =>
+      Icebergish.commit(Seq((s"d$i", null.asInstanceOf[String], s"o$i"), (s"t$i", "treats", s"o$i"))
+        .toDF("doc_id", "pred", "obj"), root, "append", partitionBy = Seq("pred"))
+    }
+    val s1 = Icebergish.upsertPartitions(
+      Seq(("d0", null.asInstanceOf[String], "oNEW")).toDF("doc_id", "pred", "obj"),
+      root, partitionBy = Seq("pred"), keyCols = Seq("doc_id"))
+    assert(Icebergish.readManifest(spark, root, s1).mode == "replace")
+    def rows() = Icebergish.read(spark, root).select("doc_id", "pred", "obj")
+      .as[(String, String, String)].collect().toSet
+    val want = Set(("d0", null, "oNEW"), ("d1", null, "o1"), ("t0", "treats", "o0"), ("t1", "treats", "o1"))
+    assert(rows() == want)
+    // the treats partition kept its two original files
+    assert(Icebergish.fileSet(spark, root, s1).count(_.contains("pred=treats")) == 2)
+    val sc = Icebergish.compactPartitions(spark, root, Seq("pred"), maxFilesPerPartition = 1)
+    assert(Icebergish.fileSet(spark, root, sc).size == 2)
+    assert(rows() == want)
+  }
+
   test("upsert over a mixed-layout chain falls back to a full copy-on-write overwrite") {
     import spark.implicits._
     val root = tmpDir("iceberg_upsert_mixed")

@@ -228,6 +228,18 @@ class Round4Spec extends AnyFunSuite {
     }
   }
 
+  test("TopK.perKey counts an exact duplicate row once, in and across partitions") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // the same (query, neighbor, cosine) candidate arrives 3 times, as an
+    // LSH pair colliding in several bands does
+    val rows = Seq(("q", 0.9, 7L), ("q", 0.8, 3L), ("q", 0.8, 5L), ("q", 0.1, 9L))
+    val df = (rows ++ rows ++ rows.take(2)).toDF("key", "ord", "tie").repartition(3)
+    val got = graft.ops.TopK.perKey(df, Seq("key"), col("ord"), col("tie"), 3)
+      .select("tie", "rank").as[(Long, Int)].collect().sortBy(_._2).toSeq
+    assert(got == Seq((7L, 1), (3L, 2), (5L, 3)))
+  }
+
   test("rangeJoinCount keeps zero-match left rows with n_in_range = 0") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
